@@ -2903,12 +2903,12 @@ def doc_nb_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-nat sums, so the oracle replays training AND scoring
     exactly."""
     from entity_resolution_spark.operators.nb_classify import nb_classify, nb_train
+    from entity_resolution_spark.util import fan_out
 
-    docs = _t(spark, sf_dir, "documents")
     # spread ONCE for both the train and classify explodes (the operators'
-    # own _spread sees the Repartition node and skips, so the corpus is
-    # shuffled exactly once, not once per call)
-    docs = docs.repartition(spark.sparkContext.defaultParallelism)
+    # own fan_out then finds a Repartition node and skips, so the corpus
+    # is shuffled at most once, not once per call)
+    docs = fan_out(_t(spark, sf_dir, "documents"), "doc_id")
     model, stats = nb_train(docs, label_col="lang", text_col="text", n=2)
     pred = nb_classify(docs, model, stats, id_col="doc_id", text_col="text", n=2)
     return (

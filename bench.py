@@ -1,9 +1,10 @@
 """Benchmark harness.
 
-Default: runs the headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON
-line: {"metric": ..., "value": <total sec>, "unit": "sec",
-"queries": {name: sec}, "sf": ..., "pairs_per_sec": ...}.
+Default: runs the headline queries at $SPARK_GRAFT_SF_DIR (default:
+SF_DIR below) on local[$SPARK_GRAFT_CPUS], writes the full
+result JSON to bench_result.json and to stderr ("BENCH_JSON {...}"), and
+prints a compact summary (metric, value, unit, sf, pairs/s, scaling
+efficiency) as the LAST stdout line.
 
 --scaling: additionally runs the candidate-pair+scoring core at
 local[8] and local[32] on the same input and reports throughput at
@@ -23,6 +24,7 @@ sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+RESULT_PATH = os.path.join(REPO, "bench_result.json")
 
 
 def _fresh_spark(n_cores: int):
@@ -62,34 +64,15 @@ def _replicate_docs(docs, mult: int):
     return reduce(DataFrame.unionByName, copies)
 
 
-def _er_core(spark, sf_dir: str, mult: int = 1):
-    """The scale-bearing core: features -> blocking -> pairs -> scoring.
-    Returns (n_pages, n_candidate_pairs)."""
+def _er_pairs(pipe, pages) -> tuple[int, int]:
+    """The scale-bearing ER core exactly as pipeline.run drives it —
+    candidates() (featurize -> blocking -> pairs) then scored()
+    (deterministic pre-pass -> two-phase scoring) — forced with one
+    aggregate. Returns (n_pages, n_candidate_pairs)."""
     from pyspark.sql import functions as F
 
-    from entity_resolution_spark.datagen import pages_from_documents
-    from entity_resolution_spark.operators.pairs import candidate_pairs
-    from entity_resolution_spark.operators.scoring import deterministic_match_pass
-    from entity_resolution_spark.plans.pipeline import EntityResolutionPipeline
-
-    # fan the (single-file) input out BEFORE any derivation work — a
-    # downstream repartition would leave the datagen/perturb stage on
-    # the raw input's 1-4 partitions
-    par = spark.sparkContext.defaultParallelism
-    docs = _replicate_docs(
-        spark.read.parquet(f"{sf_dir}/documents.parquet").repartition(par * 2, "doc_id"), mult
-    )
-    pages = pages_from_documents(docs).drop("entity_gt")
-    pipe = EntityResolutionPipeline()
-    # one materialization for the ~6 feature-table consumers (same as
-    # pipeline.run does; the map-side MinHash has no shuffle to reuse)
-    feats = pipe.featurize(pages).localCheckpoint(eager=True)
-    blocks, _stats = pipe.block(feats)
-    pairs = candidate_pairs(blocks)
-    # the pipeline's default plan shape: deterministic exact-match
-    # pre-pass, probabilistic scoring only on the remainder
-    det, rem = deterministic_match_pass(pairs, feats)
-    scored = pipe.score(rem, feats)
+    feats, pairs = pipe.candidates(pages)
+    det, scored = pipe.scored(feats, pairs)
     agg = scored.agg(
         F.count("*").alias("n_pairs"),
         F.sum((F.col("score") >= pipe.config.scoring.threshold).cast("long")).alias("n_match"),
@@ -97,6 +80,20 @@ def _er_core(spark, sf_dir: str, mult: int = 1):
     n_det = det.count()
     n_pages = feats.count()  # checkpointed — free; pages.count() would re-run datagen
     return n_pages, int(agg["n_pairs"] or 0) + n_det
+
+
+def _bench_pages(spark, sf_dir: str, mult: int = 1):
+    """Synthetic crawl pages from the documents table, `mult`x
+    replicated. The (single-file) input fans out BEFORE any derivation
+    work — a downstream repartition would leave the datagen/perturb
+    stage on the raw input's 1-4 partitions."""
+    from entity_resolution_spark.datagen import pages_from_documents
+
+    par = spark.sparkContext.defaultParallelism
+    docs = _replicate_docs(
+        spark.read.parquet(f"{sf_dir}/documents.parquet").repartition(par * 2, "doc_id"), mult
+    )
+    return pages_from_documents(docs).drop("entity_gt")
 
 
 def _warmup(spark, sf_dir: str) -> None:
@@ -343,11 +340,13 @@ def _run_headline(
         dist_rounds / max(n_dist, 1), 4
     )
 
+    from entity_resolution_spark.plans.pipeline import EntityResolutionPipeline
+
     er_stats: dict[str, int] = {}
 
     def _er_once() -> None:
-        n_pages, n_pairs = _er_core(spark, sf_dir)
-        er_stats["n_pages"], er_stats["n_pairs"] = n_pages, n_pairs
+        pages = _bench_pages(spark, sf_dir)
+        er_stats["n_pages"], er_stats["n_pairs"] = _er_pairs(EntityResolutionPipeline(), pages)
 
     _timed("er_pipeline_core", _er_once)
     er_sec = times["er_pipeline_core"]
@@ -359,34 +358,16 @@ def _run_headline(
     # engine-only variant: er_pipeline_core includes ~3s of synthetic
     # FIXTURE synthesis (pages_from_documents builds html per page —
     # datagen, not engine). Materialize the fixture once untimed and
-    # time featurize->block->pairs->det->score from disk, the way a
-    # real deployment reads its crawl table.
-    from entity_resolution_spark.datagen import pages_from_documents
-    from entity_resolution_spark.operators.pairs import candidate_pairs
-    from entity_resolution_spark.operators.scoring import deterministic_match_pass
-    from entity_resolution_spark.plans.pipeline import EntityResolutionPipeline
-
+    # time the same core from disk, the way a real deployment reads
+    # its crawl table.
     pages_dir = "/tmp/spark_graft_bench_pages"
-    par = spark.sparkContext.defaultParallelism
-    pages_from_documents(
-        spark.read.parquet(f"{sf_dir}/documents.parquet").repartition(par * 2, "doc_id")
-    ).drop("entity_gt").write.mode("overwrite").parquet(pages_dir)
+    _bench_pages(spark, sf_dir).write.mode("overwrite").parquet(pages_dir)
     pages = spark.read.parquet(pages_dir)
     pipe = EntityResolutionPipeline()
     eng_stats: dict[str, int] = {}
 
     def _engine_once() -> None:
-        feats = pipe.featurize(pages).localCheckpoint(eager=True)
-        blocks, _stats = pipe.block(feats)
-        det, rem = deterministic_match_pass(candidate_pairs(blocks), feats)
-        scored = pipe.score(rem, feats)
-        agg2 = scored.agg(
-            F.count("*").alias("n_pairs"),
-            F.sum(
-                (F.col("score") >= pipe.config.scoring.threshold).cast("long")
-            ).alias("n_match"),
-        ).first()
-        eng_stats["n_pairs"] = int(agg2["n_pairs"] or 0) + det.count()
+        _, eng_stats["n_pairs"] = _er_pairs(pipe, pages)
 
     _timed("er_pipeline_core_engine", _engine_once)
     er_e = times["er_pipeline_core_engine"]
@@ -400,28 +381,22 @@ SCALE_DIR = "/tmp/spark_graft_scale"
 
 
 def _materialize_scale_input(sf_dir: str, mult: int) -> int:
-    """Build the scaling corpus ONCE (untimed): features + candidate
-    pairs at `mult`x sf0.1, written as parquet with enough splits for
-    any parallelism level. Returns n_pairs."""
-    from entity_resolution_spark.datagen import pages_from_documents
-    from entity_resolution_spark.operators.pairs import candidate_pairs
+    """Build the scaling corpus ONCE (untimed): candidates() at `mult`x
+    sf0.1 with SCALE_DIR as checkpoint_dir, so the features and
+    candidate pairs land in its 03_features / 05_pairs stage parquet.
+    Returns n_pairs."""
+    import shutil
+
     from entity_resolution_spark.plans.pipeline import EntityResolutionPipeline
 
+    # a stale SCALE_DIR from another mult carries the same config
+    # fingerprint, so its stages would be resumed instead of rebuilt
+    shutil.rmtree(SCALE_DIR, ignore_errors=True)
     spark = _fresh_spark(CPUS)
-    par = spark.sparkContext.defaultParallelism
-    docs = _replicate_docs(
-        spark.read.parquet(f"{sf_dir}/documents.parquet").repartition(par * 2, "doc_id"), mult
+    _feats, pairs = EntityResolutionPipeline().candidates(
+        _bench_pages(spark, sf_dir, mult), checkpoint_dir=SCALE_DIR
     )
-    pages = pages_from_documents(docs).drop("entity_gt")
-    pipe = EntityResolutionPipeline()
-    feats = pipe.featurize(pages)
-    feats.repartition(64, "url_id").write.mode("overwrite").parquet(f"{SCALE_DIR}/feats")
-    feats = spark.read.parquet(f"{SCALE_DIR}/feats")
-    blocks, _stats = pipe.block(feats)
-    pairs = candidate_pairs(blocks)
-    pairs.repartition(64, "id_1", "id_2").write.mode("overwrite").parquet(f"{SCALE_DIR}/pairs")
-    n_pairs = spark.read.parquet(f"{SCALE_DIR}/pairs").count()
-    return n_pairs
+    return pairs.count()
 
 
 def _score_once(n: int) -> None:
@@ -431,8 +406,8 @@ def _score_once(n: int) -> None:
     from entity_resolution_spark.plans.pipeline import EntityResolutionPipeline
 
     spark = _fresh_spark(n)
-    feats = spark.read.parquet(f"{SCALE_DIR}/feats")
-    pairs = spark.read.parquet(f"{SCALE_DIR}/pairs")
+    feats = spark.read.parquet(f"{SCALE_DIR}/03_features")
+    pairs = spark.read.parquet(f"{SCALE_DIR}/05_pairs")
     pipe = EntityResolutionPipeline()
 
     def run(p):
@@ -450,7 +425,7 @@ def _score_once(n: int) -> None:
     # generated-code cache and starts with live python workers.
     import glob as _glob
 
-    warm_files = sorted(_glob.glob(f"{SCALE_DIR}/pairs/part-*"))[:4]
+    warm_files = sorted(_glob.glob(f"{SCALE_DIR}/05_pairs/part-*"))[:4]
     run(spark.read.parquet(*warm_files))
     # min-of-2 timed runs at the cheaper levels: the host shows
     # minute-scale interference bursts that CPU-steal accounting does
@@ -593,9 +568,22 @@ def main() -> None:
                 result["scaling_recorded"] = json.load(f)
         except OSError:
             pass
+    with open(RESULT_PATH, "w") as f:
+        json.dump(result, f, indent=1)
     sys.stdout.flush()
     print("BENCH_JSON " + json.dumps(result), file=sys.stderr)
-    print(json.dumps(result))
+    print(json.dumps(_summary(result)))
+
+
+def _summary(result: dict) -> dict:
+    """The headline fields of a full result, for the last stdout line."""
+    keys = ("metric", "value", "unit", "sf", "pairs_per_sec", "engine_pairs_per_sec")
+    out = {k: result[k] for k in keys if k in result}
+    scaling = result.get("scaling") or result.get("scaling_recorded") or {}
+    if "scaling_efficiency" in scaling:
+        out["scaling_efficiency"] = scaling["scaling_efficiency"]
+    out["full_result"] = os.path.basename(RESULT_PATH)
+    return out
 
 
 if __name__ == "__main__":

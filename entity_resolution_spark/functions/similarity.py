@@ -9,8 +9,9 @@ containment (mlir.py:1632-1633), soundex (mlir.py:1618-1623 — native
 F.soundex), hamming (mlir.py:244-297).
 
 The reference's "generalized" prefix-averaged similarities
-(mlir.py:374-466) are O(n^2) per pair and dropped by design — plain
-monotone [0,1] similarities serve the same role in scoring.
+(mlir.py:374-466) are here too, with a fused numpy kernel
+(generalized_sims); at O(L^3) per pair they stay out of pipeline
+scoring, which uses the plain monotone [0,1] similarities.
 """
 
 from __future__ import annotations

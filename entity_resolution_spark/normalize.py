@@ -44,6 +44,8 @@ def tokens(col: Column) -> Column:
     return F.filter(F.split(normalize_text(col), " "), lambda t: F.length(t) > 0)
 
 
+# 833 is a deliberate divergence from the reference's list (mlir.py:567),
+# which predates it: 833 was assigned as a toll-free code in 2017.
 TOLL_FREE_AREA_CODES = ("800", "888", "877", "866", "855", "844", "833")
 
 

@@ -1323,21 +1323,6 @@ def resize_image(
     return media.mapInPandas(op, schema=RESIZED_SCHEMA)
 
 
-def frame_sample_stub(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame sampling as explode over METADATA timestamps (no
-    payload decode — the row-multiplying layout step; decode_video
-    below does the real per-frame pixel decode for MJPEG/AVI).
-    Output: one row per (media_id, frame_ts_ms)."""
-    frames = F.sequence(
-        F.lit(0), F.coalesce(F.col("duration_ms"), F.lit(0)), F.lit(every_ms)
-    )
-    return (
-        media.filter(F.col("kind") == "video")
-        .withColumn("frame_ts_ms", F.explode(frames))
-        .select("media_id", "frame_ts_ms", "payload")
-    )
-
-
 # --------------------------------------------------------------------------
 # Video: MJPEG-in-AVI (RIFF container per the public AVI spec; frames
 # are baseline JPEGs decoded by the own T.81 codec above). Round-5:

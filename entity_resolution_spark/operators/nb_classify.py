@@ -20,8 +20,9 @@ doc's grams once, joins the broadcast model, and partial-aggregates
 per (doc, label), so the only shuffle is the per-doc combine keyed on
 the (high-cardinality) doc id. The single driver-side structure is
 nb_train's per-label doc-count table (one row per CLASS, collected to
-derive the prior denominator without a second corpus scan) — callers
-must keep the label column class-like, not id-like.
+derive the prior denominator without a second corpus scan), capped at
+_MAX_LABELS rows — an id-like label column raises instead of
+collecting the corpus.
 
 Cross-engine determinism (the DuckDB oracle hashes raw values): all
 log-probabilities are quantized to int64 micro-nats —
@@ -34,6 +35,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from entity_resolution_spark.util import fan_out
 
 LOGP_Q = 1_000_000  # micro-nats
 
@@ -57,32 +60,7 @@ def _q_ln(x: Column) -> Column:
     return F.floor(F.log(x) * LOGP_Q + F.lit(0.5)).cast("long")
 
 
-_SHUFFLE_LOGICAL_NODES = ("Join", "Aggregate", "Repartition", "Sort", "Window", "Distinct")
-
-
-def _spread(docs: DataFrame) -> DataFrame:
-    """The gram explode multiplies each row ~text-length-fold, so the
-    stage's cost follows CHARACTERS, not bytes — a byte-sized partition
-    layout (one partition for a small parquet) serializes the explode
-    onto one core. Spread the input to the session's parallelism when
-    it arrives narrower; a no-op on inputs that are already wide (the
-    100 TB case). The partition-count probe (`.rdd`) is taken ONLY for
-    scan-rooted plans, where it is pure plan conversion; for plans with
-    shuffle-inducing operators the probe would MATERIALIZE the upstream
-    stages under AQE (an extra pass over the input), and a post-shuffle
-    layout is already sized by spark.sql.shuffle.partitions — trust it.
-    Values are unaffected either way: every downstream consumer is an
-    order-independent integer agg."""
-    try:
-        plan = docs._jdf.queryExecution().optimizedPlan().toString()
-    except Exception:  # noqa: BLE001 — non-critical probe
-        return docs
-    if any(tok in plan for tok in _SHUFFLE_LOGICAL_NODES):
-        return docs
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    if docs.rdd.getNumPartitions() < par:
-        return docs.repartition(par)
-    return docs
+_MAX_LABELS = 10_000  # cap on nb_train's per-label driver collect
 
 
 def nb_train(
@@ -99,14 +77,31 @@ def nb_train(
     smoothed log-prob of an unseen gram, ln(1 / (T_label + V)).
 
     Rows with NULL labels are excluded from training (they carry no
-    signal); V is the corpus-wide distinct-gram count.
+    signal); V is the corpus-wide distinct-gram count. Raises
+    ValueError above _MAX_LABELS distinct labels.
     """
-    docs = _spread(docs)
+    # the gram explode multiplies each row ~text-length-fold, so its
+    # cost follows characters, not bytes: split a narrow input first
+    docs = fan_out(docs)
     filtered = docs.filter(F.col(label_col).isNotNull())
     base = filtered.select(
         F.col(label_col).alias("label"),
         F.explode(char_grams(F.col(text_col), n)).alias("gram"),
     )
+    # one scan yields the label-cardinality-sized doc counts; n_total is
+    # their driver-side sum — avoids a second full-scan count() (review
+    # catch). Collected first and capped, so an id-like label column
+    # fails before any gram work.
+    n_docs_agg = filtered.groupBy(F.col(label_col).alias("label")).agg(
+        F.count("*").alias("n_label")
+    )
+    n_docs_rows = n_docs_agg.limit(_MAX_LABELS + 1).collect()
+    if len(n_docs_rows) > _MAX_LABELS:
+        raise ValueError(
+            f"nb_train: label column {label_col!r} has more than {_MAX_LABELS} "
+            "distinct values; the per-label counts are collected to the "
+            "driver, so the label column must be class-like, not id-like"
+        )
     counts = base.groupBy("label", "gram").agg(F.count("*").alias("c"))
     vocab = counts.select("gram").distinct().count()
     totals = counts.groupBy("label").agg(F.sum("c").alias("t"))
@@ -118,13 +113,6 @@ def nb_train(
             _q_ln((F.col("c") + 1) / (F.col("t") + F.lit(vocab))).alias("q_logp"),
         )
     )
-    # one scan yields the label-cardinality-sized doc counts; n_total is
-    # their driver-side sum — avoids a second full-scan count() (review
-    # catch). The collected frame is tiny (one row per label).
-    n_docs_agg = filtered.groupBy(F.col(label_col).alias("label")).agg(
-        F.count("*").alias("n_label")
-    )
-    n_docs_rows = n_docs_agg.collect()
     n_total = sum(r["n_label"] for r in n_docs_rows)
     n_docs = docs.sparkSession.createDataFrame(n_docs_rows, n_docs_agg.schema)
     label_stats = n_docs.join(F.broadcast(totals), "label").select(
@@ -156,7 +144,7 @@ def nb_classify(
     (-score, label); no window, no skew: the combine key is the doc
     id). Docs with no grams (NULL/short text) score prior-only, as the
     reference's empty-feature row does."""
-    docs = _spread(docs)
+    docs = fan_out(docs)
     grams = docs.select(
         F.col(id_col).alias("_id"),
         F.explode(char_grams(F.col(text_col), n)).alias("gram"),

@@ -60,7 +60,7 @@ class ScoringConfig:
     @property
     def min_matchable_jaccard(self) -> float:
         """Smallest exact shingle-Jaccard a matching pair can have,
-        taking the minimum over score_pairs' two branches:
+        taking the minimum over the score formula's two branches:
 
         - j < cheap_gate: JW/Levenshtein are hard-zeroed, score =
           w_jaccard*j — matches iff j >= threshold/w_jaccard.
@@ -90,7 +90,7 @@ class ScoringConfig:
         With defaults (j_min=0.20, 64 perms, 3 sigma): 0.20 - 3*0.05 =
         0.05. A pair at exactly j_min slips under the gate with
         P[Bin(64,0.2) <= 3] ~ 4e-4; above j_min the tail probability
-        decays exponentially, so two-phase edges match score_pairs
+        decays exponentially, so two-phase edges match single-phase
         edges except on that vanishing boundary set (equivalence tested
         on the seeded corpus in tests/test_pipeline_e2e.py).
         """
@@ -183,48 +183,6 @@ def resolve_broadcast(
     return est <= cfg.broadcast_threshold_bytes
 
 
-def score_pairs(pairs_feat: DataFrame, cfg: ScoringConfig = ScoringConfig()) -> DataFrame:
-    """pairs with *_1/*_2 feature columns -> + feature scores + score.
-
-    Expects columns: fingerprint_{1,2}, shingles_{1,2} (array<bigint>),
-    norm_title_{1,2}, text_prefix_{1,2}.
-    """
-    # eqNullSafe: two null-fingerprint pages (null html -> null text)
-    # carry identical sentinel signatures and must compare as an exact
-    # pair, not a NULL that silently falls out of every filter branch
-    # (round-2 advisory).
-    exact = F.col("fingerprint_1").eqNullSafe(F.col("fingerprint_2")).alias("exact_dup")
-    jac = token_jaccard(F.col("shingles_1"), F.col("shingles_2")).alias("jaccard_shingles")
-    gated = pairs_feat.select("*", exact, jac)
-
-    # Cheap gate: exact dups score 1 immediately; pairs with
-    # near-disjoint shingle sets never see JW/Levenshtein.
-    survivors_cond = (~F.col("exact_dup")) & (F.col("jaccard_shingles") >= cfg.cheap_gate)
-
-    jw = F.when(
-        survivors_cond, jaro_winkler(F.col("norm_title_1"), F.col("norm_title_2"))
-    ).otherwise(F.lit(0.0))
-    lev = F.when(
-        survivors_cond, levenshtein_ratio(F.col("text_prefix_1"), F.col("text_prefix_2"))
-    ).otherwise(F.lit(0.0))
-
-    scored = gated.select(
-        "*",
-        jw.alias("jw_title"),
-        lev.alias("lev_ratio_prefix"),
-    )
-    score = (
-        F.when(F.col("exact_dup"), F.lit(1.0))
-        .otherwise(
-            F.col("jaccard_shingles") * cfg.w_jaccard
-            + F.col("jw_title") * cfg.w_title_jw
-            + F.col("lev_ratio_prefix") * cfg.w_prefix_lev
-        )
-        .alias("score")
-    )
-    return scored.select("*", score)
-
-
 def score_pairs_two_phase(
     pairs: DataFrame, features: DataFrame, cfg: ScoringConfig = ScoringConfig()
 ) -> DataFrame:
@@ -234,14 +192,15 @@ def score_pairs_two_phase(
     multi-KB shingle arrays — and gates on the MinHash Jaccard
     ESTIMATE. Phase 2 re-joins the full payload (shingles, title,
     prefix) for the small survivor set and computes the exact score
-    with the same formula as score_pairs. At web scale this cuts the
+    with the single-phase formula. At web scale this cuts the
     dominant pair-join shuffle by the candidate/survivor ratio
     (typically 10-100x) and keeps the Arrow-batched UDFs off the
     non-survivor stream entirely (a `when()` guard does NOT stop Spark
     evaluating a Python UDF on every row — only a filter does).
 
-    Scores are identical to score_pairs for every pair passing the
-    estimate gate; sub-gate pairs get score = est * w_jaccard, which is
+    Scores equal the single-phase reference scorer's (kept in
+    tests/test_pipeline_e2e.py) for every pair passing the estimate
+    gate; sub-gate pairs get score = est * w_jaccard, which is
     below any usable threshold by construction (est < gate_est).
     """
     from entity_resolution_spark.functions.similarity import minhash_jaccard_estimate
@@ -258,9 +217,6 @@ def score_pairs_two_phase(
     # coalescing — exactly the guarantee the CPU stages need.
     par = pairs.sparkSession.sparkContext.defaultParallelism
 
-    def _spread(df: DataFrame, width: int) -> DataFrame:
-        return df.repartition(width, "id_1", "id_2")
-
     # Phase-1 and phase-2 attach different projections (narrow
     # fingerprint+signature vs wide shingles+title+prefix), so the
     # broadcast choice is resolved PER ATTACH. The phase-2 estimate is
@@ -273,7 +229,7 @@ def score_pairs_two_phase(
     )
     p1 = (
         attach_features(
-            _spread(pairs, par * 2),
+            pairs.repartition(par * 2, "id_1", "id_2"),
             features,
             cols=["fingerprint", "minhash_sig"],
             broadcast=bcast_p1,
@@ -312,9 +268,9 @@ def score_pairs_two_phase(
         .alias("score"),
     )
 
-    surv = _spread(
-        p1.filter(needs_full).select("id_1", "id_2", "exact_dup", "jaccard_est"), par
-    )
+    surv = p1.filter(needs_full).select(
+        "id_1", "id_2", "exact_dup", "jaccard_est"
+    ).repartition(par, "id_1", "id_2")
     # Only survivors' features are needed in phase 2 — semi-join the
     # feature table down first. At web scale the full feature table is
     # never broadcastable; the survivor slice usually is.
@@ -416,7 +372,7 @@ def deterministic_match_pass(
     # `~same` and silently vanishes from det_edges AND remaining
     # (round-2 advisory). Null-null pairs (both pages extracted to
     # null text) are identical sentinel content -> deterministic match,
-    # matching score_pairs' eqNullSafe exact_dup (score 1.0).
+    # matching scoring's eqNullSafe exact_dup (score 1.0).
     same = F.col("fingerprint_1").eqNullSafe(F.col("fingerprint_2"))
     det_edges = tagged.filter(same).select(
         F.col("id_1").alias("src"), F.col("id_2").alias("dst")

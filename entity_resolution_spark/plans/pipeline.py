@@ -131,23 +131,17 @@ class EntityResolutionPipeline:
     def score(self, pairs: DataFrame, feats: DataFrame) -> DataFrame:
         return score_pairs_two_phase(pairs, feats, self.config.scoring)
 
-    # -- full run ---------------------------------------------------------
-    def run(self, pages: DataFrame, checkpoint_dir: str | None = None) -> DataFrame:
-        """pages -> entities(url, url_id, entity_id, canonical_url,
-        component_size, first_seen)."""
-        spark = pages.sparkSession
-        ckpt = (
-            StageCheckpointer(spark, checkpoint_dir, self.config.fingerprint())
-            if checkpoint_dir
-            else None
-        )
-
-        def staged(name: str, fn) -> DataFrame:
-            if ckpt is not None:
-                return ckpt.run_stage(name, fn)
-            return fn()
-
-        feats = staged("03_features", lambda: self.featurize(pages))
+    # -- stage groups (run() and bench.py share them) ----------------------
+    # Stages are reached through self.* and module globals looked up at
+    # call time, so tracing can wrap them.
+    def candidates(
+        self, pages: DataFrame, checkpoint_dir: str | None = None
+    ) -> tuple[DataFrame, DataFrame]:
+        """pages -> (feats, pairs): fan-out featurize -> feature
+        materialization -> block (records metrics["key_stats"]) ->
+        candidate pairs, resuming stages 03-05 from checkpoint_dir."""
+        ckpt = self._checkpointer(pages.sparkSession, checkpoint_dir)
+        feats = _staged(ckpt, "03_features", lambda: self.featurize(pages))
         if ckpt is None:
             # The feature table feeds ~6 subplans (block keys, both
             # sides of each attach, the survivor semi-join, stamping).
@@ -167,16 +161,26 @@ class EntityResolutionPipeline:
                 blocks = ckpt.write(blocks, "04_blocks")
                 stats = ckpt.write(stats, "04_key_stats")
         self.metrics["key_stats"] = stats
-        pairs = staged("05_pairs", lambda: candidate_pairs(blocks))
+        pairs = _staged(ckpt, "05_pairs", lambda: candidate_pairs(blocks))
+        return feats, pairs
+
+    def scored(
+        self, feats: DataFrame, pairs: DataFrame, checkpoint_dir: str | None = None
+    ) -> tuple[DataFrame | None, DataFrame]:
+        """(feats, pairs) -> (det_edges, scored): deterministic
+        exact-match pre-pass (None when disabled or skipped on resume)
+        -> two-phase scoring of the remaining pairs, resuming stage 06
+        from checkpoint_dir."""
+        ckpt = self._checkpointer(feats.sparkSession, checkpoint_dir)
         # the pass eagerly materializes its pair-fingerprint attach —
         # skip it when the components checkpoint is complete (its only
         # consumers, edges and the scored-stage input, are then read
         # from parquet and the eager join would be pure waste on every
         # resume)
-        need_det = self.config.deterministic_prepass and not (
+        det_edges = None
+        if self.config.deterministic_prepass and not (
             ckpt is not None and ckpt.is_complete("08_components")
-        )
-        if need_det:
+        ):
             det_edges, pairs = deterministic_match_pass(
                 pairs,
                 feats,
@@ -188,20 +192,29 @@ class EntityResolutionPipeline:
                     self.config.scoring, feats, ["fingerprint"]
                 ),
             )
-        else:
-            det_edges = None
-        scored = staged("06_scored", lambda: self.score(pairs, feats))
+        return det_edges, _staged(ckpt, "06_scored", lambda: self.score(pairs, feats))
+
+    # -- full run ---------------------------------------------------------
+    def run(self, pages: DataFrame, checkpoint_dir: str | None = None) -> DataFrame:
+        """pages -> entities(url, url_id, entity_id, canonical_url,
+        component_size, first_seen)."""
+        feats, pairs = self.candidates(pages, checkpoint_dir)
+        det_edges, scored = self.scored(feats, pairs, checkpoint_dir)
         edges = edges_from_scores(scored, self.config.scoring.threshold)
         if det_edges is not None:
             edges = edges.unionByName(det_edges)
-        comps = staged("08_components", lambda: connected_components(edges))
-        entities = staged(
+        ckpt = self._checkpointer(pages.sparkSession, checkpoint_dir)
+        comps = _staged(ckpt, "08_components", lambda: connected_components(edges))
+        return _staged(
+            ckpt,
             "09_entities",
-            lambda: stamp_entities(
-                feats.select("url", "url_id", "warc_ts"), comps
-            ),
+            lambda: stamp_entities(feats.select("url", "url_id", "warc_ts"), comps),
         )
-        return entities
+
+    def _checkpointer(self, spark, checkpoint_dir: str | None) -> StageCheckpointer | None:
+        if not checkpoint_dir:
+            return None
+        return StageCheckpointer(spark, checkpoint_dir, self.config.fingerprint())
 
     def collect_metrics(self) -> dict[str, int]:
         stats: DataFrame = self.metrics.get("key_stats")  # type: ignore[assignment]
@@ -209,3 +222,7 @@ class EntityResolutionPipeline:
             return {}
         rows = stats.groupBy("status").agg(F.count("*").alias("n")).collect()
         return {f"keys_{r['status']}": int(r["n"]) for r in rows}
+
+
+def _staged(ckpt: StageCheckpointer | None, name: str, fn) -> DataFrame:
+    return fn() if ckpt is None else ckpt.run_stage(name, fn)

@@ -4,23 +4,22 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-# logical-plan node names whose presence means the frame already has
+# fan_out's floor on the target width
+MIN_WIDTH = 8
+
+# logical-plan operators whose presence means the frame already has
 # shuffle-determined (or caller-chosen) width — fanning out again
 # could only shrink it or add a useless exchange
-_WIDE_NODES = (
-    "Repartition",  # covers RepartitionByExpression (explicit caller width)
-    "Join",
-    "Aggregate",
-    "Window",
-    "Sort",
-    "Deduplicate",
+_WIDE_OPERATORS = frozenset(
+    "Repartition RepartitionByExpression RebalancePartitions Join Aggregate Window"
+    " Sort Distinct Deduplicate DeduplicateWithinWatermark Intersect Except".split()
 )
 
 
-def fan_out(df: DataFrame, *key_cols: str, minimum: int = 8) -> DataFrame:
+def fan_out(df: DataFrame, *key_cols: str) -> DataFrame:
     """Repartition a narrow input to cluster width before CPU-bound
-    map stages (shingling, MinHash folds, Arrow UDFs) WHEN the source
-    has fewer input files than cores.
+    map stages (shingling, MinHash folds, Arrow UDFs, char-gram
+    explodes) WHEN the source has fewer input files than cores.
 
     A single-parquet-file table arrives as 1-2 partitions, and a
     map-side operator (deliberately shuffle-free at scale) then runs
@@ -32,20 +31,23 @@ def fan_out(df: DataFrame, *key_cols: str, minimum: int = 8) -> DataFrame:
     layout deterministic; values of every downstream operator are
     partition-independent by design (SURVEY §7.3d).
     """
-    sc = df.sparkSession.sparkContext
-    target = max(sc.defaultParallelism, minimum)
+    target = max(df.sparkSession.sparkContext.defaultParallelism, MIN_WIDTH)
     # The file probe describes the ROOT SCAN, not the frame's current
-    # partitioning: a frame the caller already widened (explicit
-    # repartition) or that passed through a shuffle (join/agg/window —
-    # spark.sql.shuffle.partitions wide) would be SHRUNK back to
-    # `target` by a second shuffle. Skip those — fan_out is for bare
-    # narrow scans only. The analyzed-plan string is an analysis-time
-    # probe (no physical planning, no .rdd conversion).
+    # partitioning: a frame the caller already widened or that passed
+    # through a shuffle would be SHRUNK back to `target` by a second
+    # shuffle — skip those. The analyzed plan is walked node by node
+    # and matched on operator NAMES, so a column such as JoinDate or
+    # SortKey in the plan text cannot read as an operator.
     try:
-        plan = df._jdf.queryExecution().analyzed().toString()
+        stack, nodes = [df._jdf.queryExecution().analyzed()], set()
+        while stack:
+            node = stack.pop()
+            nodes.add(node.nodeName())
+            kids = node.children()
+            stack.extend(kids.apply(i) for i in range(kids.size()))
     except Exception:  # noqa: BLE001 — probe unavailable: assume bare scan
-        plan = ""
-    if any(tok in plan for tok in _WIDE_NODES):
+        nodes = set()
+    if nodes & _WIDE_OPERATORS:
         return df
     try:
         n_files = len(df.inputFiles())

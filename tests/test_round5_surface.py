@@ -257,6 +257,21 @@ def test_nb_model_matches_hand_laplace(spark):
     assert s["X"][1] == math.floor(math.log(1 / 3) * LOGP_Q + 0.5)
 
 
+def test_nb_train_rejects_id_like_label_column(spark):
+    """nb_train collects one row per label to the driver; a label column
+    with more distinct values than the cap (e.g. a doc id) must raise,
+    naming the cap and the column, instead of collecting the corpus."""
+    from entity_resolution_spark.operators.nb_classify import _MAX_LABELS, nb_train
+
+    docs = spark.range(_MAX_LABELS + 1).select(
+        F.col("id").alias("doc_id"),
+        F.lit("abab").alias("text"),
+        F.col("id").cast("string").alias("url"),
+    )
+    with pytest.raises(ValueError, match=f"'url'.*{_MAX_LABELS}"):
+        nb_train(docs, label_col="url", text_col="text", n=2)
+
+
 def test_nb_short_and_null_text_scores_prior_only(spark):
     from entity_resolution_spark.operators.nb_classify import nb_classify, nb_train
 

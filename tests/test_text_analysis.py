@@ -5,7 +5,6 @@ from pyspark.sql import functions as F
 from entity_resolution_spark.operators.multimodal import (
     MEDIA_SCHEMA,
     extract_media_features,
-    frame_sample_stub,
 )
 from entity_resolution_spark.operators.text_analysis import (
     analyze_documents,
@@ -66,6 +65,19 @@ def test_media_feature_extraction_drops_corrupt(spark):
     # determinism: same payload -> same feature
     again = extract_media_features(media, dim=16).filter(F.col("media_id") == 1).first()
     assert again["feature"] == r["feature"]
+
+
+def frame_sample_stub(media, every_ms=1000):
+    """Video frame sampling as an explode over METADATA timestamps (no
+    payload decode): one row per (media_id, frame_ts_ms)."""
+    frames = F.sequence(
+        F.lit(0), F.coalesce(F.col("duration_ms"), F.lit(0)), F.lit(every_ms)
+    )
+    return (
+        media.filter(F.col("kind") == "video")
+        .withColumn("frame_ts_ms", F.explode(frames))
+        .select("media_id", "frame_ts_ms", "payload")
+    )
 
 
 def test_frame_sampling(spark):

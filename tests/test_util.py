@@ -2,14 +2,18 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from entity_resolution_spark.util import fan_out
 
 
-def test_fan_out_widens_single_file_input(spark, tmp_path):
+@pytest.mark.parametrize("col", ["k", "JoinDate", "SortKey"])
+def test_fan_out_widens_single_file_input(spark, tmp_path, col):
+    # column names containing operator names (Join, Sort) must not read
+    # as a post-shuffle plan: the probe matches operator nodes, not text
     path = str(tmp_path / "one_file")
-    spark.range(1000).withColumn("k", F.col("id") % 7).coalesce(1).write.parquet(path)
+    spark.range(1000).withColumn(col, F.col("id") % 7).coalesce(1).write.parquet(path)
     df = spark.read.parquet(path)
     assert len(df.inputFiles()) == 1
     out = fan_out(df, "id")
@@ -17,6 +21,17 @@ def test_fan_out_widens_single_file_input(spark, tmp_path):
     assert out.rdd.getNumPartitions() >= 8
     # fan-out is a pure repartition: same rows
     assert out.count() == 1000
+
+
+@pytest.mark.parametrize("col", ["JoinDate", "SortKey"])
+def test_fan_out_skips_real_shuffle_with_operator_named_column(spark, tmp_path, col):
+    path = str(tmp_path / "one_file")
+    spark.range(1000).withColumn(col, F.col("id") % 7).coalesce(1).write.parquet(path)
+    df = spark.read.parquet(path)
+    agg = df.groupBy(col).count()
+    assert fan_out(agg, col) is agg
+    joined = df.join(df.withColumnRenamed("id", "id2"), col)
+    assert fan_out(joined, col) is joined
 
 
 def test_fan_out_noop_when_files_cover_cores(spark, tmp_path):

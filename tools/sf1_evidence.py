@@ -45,8 +45,7 @@ def _shuffle_stats(ui_url: str) -> dict:
 def main() -> None:
     from pyspark.sql import functions as F
 
-    from bench import _replicate_docs, _warmup
-    from entity_resolution_spark.datagen import pages_from_documents
+    from bench import _bench_pages, _warmup
     from entity_resolution_spark.operators.pairs import candidate_pairs
     from entity_resolution_spark.operators.scoring import deterministic_match_pass
     from entity_resolution_spark.plans.pipeline import EntityResolutionPipeline
@@ -64,13 +63,8 @@ def main() -> None:
     )
     _warmup(spark, sf_dir)
 
-    par = spark.sparkContext.defaultParallelism
     t0 = time.time()
-    docs = _replicate_docs(
-        spark.read.parquet(f"{sf_dir}/documents.parquet").repartition(par * 2, "doc_id"),
-        mult,
-    )
-    pages = pages_from_documents(docs).drop("entity_gt")
+    pages = _bench_pages(spark, sf_dir, mult)
     pipe = EntityResolutionPipeline()
     # parquet spill, NOT localCheckpoint: the feature table carries
     # multi-KB shingle arrays, and beyond ~100k pages the heap-resident
