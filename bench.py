@@ -117,7 +117,7 @@ def _warmup(spark, sf_dir: str) -> None:
 
 def _run_headline(
     spark, sf_dir: str
-) -> tuple[dict[str, float], dict[str, float], dict[str, list[float]]]:
+) -> tuple[dict[str, float], dict[str, object], dict[str, list[float]]]:
     import __spark_entry__ as em
 
     names = [
@@ -161,13 +161,20 @@ def _run_headline(
     # host-interference burst it lands on — observed 2-9x per-query
     # swings on identical code; per-query minima are steady-state)
     samples: dict[str, list[float]] = {}
+    # Janino compiles per repetition (one compilation-time sample per
+    # codegen cache miss): a warm repeat that still compiles its whole
+    # plan set means the session's codegen cache is too small again
+    compiles: dict[str, list[int]] = {}
+    compile_times = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
 
     def _timed(key: str, fn, reps: int = 2) -> None:
         best = float("inf")
         for _ in range(reps):
+            c0 = compile_times.getCount()
             t0 = time.time()
             fn()
             dt = round(time.time() - t0, 3)
+            compiles.setdefault(key, []).append(compile_times.getCount() - c0)
             samples.setdefault(key, []).append(dt)
             best = min(best, dt)
         times[key] = best
@@ -231,7 +238,7 @@ def _run_headline(
         .save(),
     )
 
-    extras: dict[str, float] = {}
+    extras: dict[str, object] = {"codegen_compiles": compiles}
 
     # vocab-scale BPE evidence (round-3 judge item): 1,000 merges via
     # batched non-interacting selection (merges_per_round=32), timed,

@@ -64,13 +64,14 @@ def _edge_checksum(edges: DataFrame) -> tuple[int, int]:
     return int(row["n"]), int(row["chk"])
 
 
-def connected_components(
-    edges: DataFrame, max_iter: int = 50, checkpoint: bool = True
-) -> DataFrame:
+def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
     """edges(src, dst) -> (id, component = min id in the component).
 
     Iterates large-star/small-star to a fixed point (edge-set checksum
     stable), localCheckpoint()ing each round to truncate lineage.
+    Raises RuntimeError if no fixed point is reached in ``max_iter``
+    rounds: the edge set is then not yet a star graph and reading
+    components off it would split real components.
     Vertices that only appear as sources/dsts of self-loops or not at
     all are the caller's concern (singletons are stamped separately in
     the pipeline).
@@ -81,21 +82,23 @@ def connected_components(
     made string-id edges THROW under ANSI mode — found by the verify
     drive running curation directly on url-keyed pages.)
     """
+    if max_iter < 1:
+        raise ValueError(f"connected_components needs max_iter >= 1, got {max_iter}")
     cur = (
         edges.select("src", "dst").filter(F.col("src") != F.col("dst")).distinct()
-    )
-    if checkpoint:
-        cur = cur.localCheckpoint()
+    ).localCheckpoint()
     prev_sig: tuple[int, int] | None = None
     for _ in range(max_iter):
-        nxt = _small_star(_large_star(cur))
-        if checkpoint:
-            nxt = nxt.localCheckpoint()
-        sig = _edge_checksum(nxt)
-        cur = nxt
+        cur = _small_star(_large_star(cur)).localCheckpoint()
+        sig = _edge_checksum(cur)
         if sig == prev_sig:
             break
         prev_sig = sig
+    else:
+        raise RuntimeError(
+            f"connected_components did not converge in max_iter={max_iter} rounds "
+            f"({sig[0]} edges left after the last round)"
+        )
     # Fixed point is a star graph: src -> component root (dst).
     members = cur.select(F.col("src").alias("id"), F.col("dst").alias("component"))
     roots = cur.select(F.col("dst").alias("id"), F.col("dst").alias("component")).distinct()

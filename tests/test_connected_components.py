@@ -3,6 +3,8 @@
 
 import random
 
+import pytest
+
 from entity_resolution_spark.operators.connected_components import connected_components
 
 
@@ -87,3 +89,11 @@ def test_string_ids(spark):
         "https://a": "https://a", "https://b": "https://a", "https://c": "https://a",
         "x": "x", "y": "x",
     }
+
+
+def test_unconverged_raises(spark):
+    """One round cannot collapse a 201-node path into a star; returning
+    that edge set would split the path into ~199 "components"."""
+    edges = spark.createDataFrame([(i, i + 1) for i in range(200)], "src long, dst long")
+    with pytest.raises(RuntimeError, match=r"max_iter=1 .*\d+ edges"):
+        connected_components(edges, max_iter=1)

@@ -184,25 +184,31 @@ def test_fused_generalized_sims_matches_individual_columns(spark):
 
     rng = random.Random(13)
     alpha = "abcdefg XYZ0éß"
-    vals = ["", "a", "ab", "ba", None] + [
-        "".join(rng.choice(alpha) for _ in range(rng.randint(0, 16)))
-        for _ in range(400)
-    ]
-    rows = [(i, rng.choice(vals), rng.choice(vals)) for i in range(1200)]
-    df = spark.createDataFrame(rows, "i long, a string, b string")
-    out = (
-        df.select(
-            "i",
-            generalized_sims(F.col("a"), F.col("b")).alias("_s"),
-            generalized_jaro_winkler(F.col("a"), F.col("b")).alias("gjw_ind"),
-            generalized_levenshtein_ratio(F.col("a"), F.col("b")).alias("glev_ind"),
+
+    def rand_str(lo, hi):
+        return "".join(rng.choice(alpha) for _ in range(rng.randint(lo, hi)))
+
+    vals = ["", "a", "ab", "ba", None] + [rand_str(0, 16) for _ in range(400)]
+    short_rows = [(i, rng.choice(vals), rng.choice(vals)) for i in range(1200)]
+    # above the 16-char JW gate: scalar gjw, still the vectorized
+    # _glev_batch_np (up to its 64-char gate). Few rows — the scalar
+    # prefix JW costs tens of ms per pair at these lengths.
+    long_rows = [(i, rand_str(17, 64), rand_str(17, 64)) for i in range(300)]
+    for rows in (short_rows, long_rows):
+        df = spark.createDataFrame(rows, "i long, a string, b string")
+        out = (
+            df.select(
+                "i",
+                generalized_sims(F.col("a"), F.col("b")).alias("_s"),
+                generalized_jaro_winkler(F.col("a"), F.col("b")).alias("gjw_ind"),
+                generalized_levenshtein_ratio(F.col("a"), F.col("b")).alias("glev_ind"),
+            )
+            .select("i", "_s.gjw", "_s.glev", "gjw_ind", "glev_ind")
+            .collect()
         )
-        .select("i", "_s.gjw", "_s.glev", "gjw_ind", "glev_ind")
-        .collect()
-    )
-    for r in out:
-        assert r["gjw"] == r["gjw_ind"], (r["i"], r["gjw"], r["gjw_ind"])
-        assert r["glev"] == r["glev_ind"], (r["i"], r["glev"], r["glev_ind"])
+        for r in out:
+            assert r["gjw"] == r["gjw_ind"], (r["i"], r["gjw"], r["gjw_ind"])
+            assert r["glev"] == r["glev_ind"], (r["i"], r["glev"], r["glev_ind"])
 
 
 def test_generalized_sims_null_and_empty(spark):
