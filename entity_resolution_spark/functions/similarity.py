@@ -3,37 +3,28 @@ a builtin.
 
 Reference parity (SURVEY.md §2.8): Levenshtein (mlir.py:300-321 — here
 native F.levenshtein), token-overlap scores (mlir.py:225-241 — here
-exact set Jaccard on arrays), Jaro-Winkler (mlir.py:338-370 — here a
-pandas UDF, Arrow-batched, no per-row Python UDF registration),
-containment (mlir.py:1632-1633), soundex (mlir.py:1618-1623 — native
-F.soundex), hamming (mlir.py:244-297).
+exact set Jaccard on arrays), Jaro-Winkler (mlir.py:338-370), containment
+(mlir.py:1632-1633), soundex (mlir.py:1618-1623 — native F.soundex),
+hamming (mlir.py:244-297).
 
-The reference's "generalized" prefix-averaged similarities
-(mlir.py:374-466) are here too, with a fused numpy kernel
-(generalized_sims); at O(L^3) per pair they stay out of pipeline
-scoring, which uses the plain monotone [0,1] similarities.
+Jaro-Winkler has ONE implementation: the length-generic numpy kernel
+``_jw_np``, which scores a whole Arrow batch in one vector pass per
+character position. ``jaro_winkler`` calls it at full length; the
+reference's prefix-averaged "generalized" similarities (mlir.py:374-466)
+call it once per prefix length, next to a shared-DP Levenshtein kernel
+(``generalized_sims``). Batches are split into power-of-two length
+buckets, so no input length falls back to per-row Python. At O(L^3) per
+pair the generalized sims stay out of pipeline scoring, which uses the
+plain monotone [0,1] similarities.
 """
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-# Optional C fast path: rapidfuzz is not installed in the build sandbox
-# but is standard in real deployments (the reference itself depends on
-# it, reference setup.py:12-23). The pure-Python fallbacks below are
-# oracle-tested to agree with it; the scalar pytest oracle covers both
-# paths (tests/test_similarity.py).
-try:  # pragma: no cover - exercised only where rapidfuzz exists
-    from rapidfuzz.distance import DamerauLevenshtein as _RF_DL
-    from rapidfuzz.distance import JaroWinkler as _RF_JW
-
-    _HAVE_RAPIDFUZZ = True
-except ImportError:
-    _RF_DL = _RF_JW = None
-    _HAVE_RAPIDFUZZ = False
 
 
 # --------------------------------------------------------------------------
@@ -97,95 +88,100 @@ def hamming_norm(a: Column, b: Column) -> Column:
 # Arrow-batched (pandas UDF) similarities — Spark has no builtin
 # --------------------------------------------------------------------------
 
-def _jaro(s1: str, s2: str) -> float:
-    if s1 == s2:
-        return 1.0
-    len1, len2 = len(s1), len(s2)
-    if len1 == 0 or len2 == 0:
-        return 0.0
-    match_dist = max(len1, len2) // 2 - 1
-    s1_m = [False] * len1
-    s2_m = [False] * len2
-    matches = 0
-    for i in range(len1):
-        lo = max(0, i - match_dist)
-        hi = min(i + match_dist + 1, len2)
-        for j in range(lo, hi):
-            if not s2_m[j] and s1[i] == s2[j]:
-                s1_m[i] = s2_m[j] = True
-                matches += 1
-                break
-    if matches == 0:
-        return 0.0
-    t = 0
-    k = 0
-    for i in range(len1):
-        if s1_m[i]:
-            while not s2_m[k]:
-                k += 1
-            if s1[i] != s2[k]:
-                t += 1
-            k += 1
-    t //= 2
-    m = matches
-    return (m / len1 + m / len2 + (m - t) / m) / 3.0
+def _encode(strs: np.ndarray, lens: np.ndarray, width: int, pad: int) -> np.ndarray:
+    """(rows, width) int32 code-point matrix; cells past each row's
+    length hold ``pad``, a negative value no code point equals."""
+    # one big utf-32 encode beats a per-row frombuffer loop ~10x
+    codes = np.frombuffer(
+        "".join(x.ljust(width, "\x00") for x in strs).encode("utf-32-le"), np.int32
+    ).reshape(len(strs), width)
+    return np.where(np.arange(width) < lens[:, None], codes, np.int32(pad))
 
 
-def jaro_winkler_py(
-    s1: str, s2: str, p: float = 0.1, max_prefix: int = 4, boost_threshold: float = 0.7
-) -> float:
-    """Scalar Jaro-Winkler in [0,1]. Standard Winkler: the prefix boost
-    applies only when jaro > boost_threshold (0.7), matching
-    rapidfuzz/DuckDB semantics."""
-    if s1 is None or s2 is None:
-        return 0.0
-    j = _jaro(s1, s2)
-    if j <= boost_threshold:
-        return j
-    prefix = 0
-    for a, b in zip(s1[:max_prefix], s2[:max_prefix]):
-        if a == b:
-            prefix += 1
-        else:
-            break
-    return j + prefix * p * (1.0 - j)
+def _by_length_bucket(sa: np.ndarray, sb: np.ndarray, *kernels) -> list[np.ndarray]:
+    """Run each ``kernel(A, Bm, la, lb) -> float64[rows]`` over a batch
+    of string pairs, grouping rows into power-of-two buckets of
+    max(len a, len b) and encoding each bucket once at its own widest
+    row — one long string makes only its bucket pay its length. The
+    pads of A and Bm (-1 and -2) never equal each other or a real
+    character, so kernels need no per-cell length masks."""
+    n_rows = len(sa)
+    la = np.fromiter(map(len, sa), dtype=np.int64, count=n_rows)
+    lb = np.fromiter(map(len, sb), dtype=np.int64, count=n_rows)
+    longest = np.maximum(la, lb)
+    bucket = np.frexp(longest)[1]  # floor(log2 L) + 1; 0 for L == 0
+    outs = [np.zeros(n_rows, dtype=np.float64) for _ in kernels]
+    for k in np.unique(bucket):
+        rows = np.flatnonzero(bucket == k)
+        width = max(1, int(longest[rows].max()))
+        A = _encode(sa[rows], la[rows], width, -1)
+        Bm = _encode(sb[rows], lb[rows], width, -2)
+        for out, kernel in zip(outs, kernels):
+            out[rows] = kernel(A, Bm, la[rows], lb[rows])
+    return outs
+
+
+def _jw_np(A: np.ndarray, Bm: np.ndarray, la: np.ndarray, lb: np.ndarray) -> np.ndarray:
+    """Jaro-Winkler of each row over the first la/lb code points of A/Bm
+    (pads as ``_by_length_bucket`` writes them). One vector pass per
+    position i of a does the scalar greedy match for every row at once:
+    the candidates are the unmatched b_j equal to a_i inside the window
+    |i - j| <= max(la, lb) // 2 - 1, and the lowest one is taken. The
+    transposition, Jaro and Winkler arithmetic then follow the scalar
+    definition in the same IEEE order, so results are bit-identical to
+    it (pinned against the scalar oracle in the tests)."""
+    n_rows, width = A.shape
+    rows = np.arange(n_rows)
+    cols = np.arange(width)
+    window = np.maximum(la, lb)[:, None] // 2 - 1
+    free = np.ones((n_rows, width), dtype=bool)  # b_j not yet matched
+    s1m = np.zeros((n_rows, width), dtype=bool)
+    for i in range(width):
+        cand = (Bm == A[:, i, None]) & free & (np.abs(cols - i) <= window)
+        j = cand.argmax(axis=1)
+        hit = cand[rows, j]
+        free[rows[hit], j[hit]] = False
+        s1m[:, i] = hit
+    m = s1m.sum(axis=1)
+    # the k-th matched a and the k-th matched b of a row sit at the same
+    # flat offset, since both sides hold m matches in row-major order
+    mismatch = A[s1m] != Bm[~free]
+    t = np.bincount(np.repeat(rows, m)[mismatch], minlength=n_rows) // 2
+    mf = m.astype(np.float64)
+    jaro = (mf / np.maximum(la, 1) + mf / np.maximum(lb, 1) + (mf - t) / np.maximum(m, 1)) / 3.0
+    jaro = np.where(m > 0, jaro, 0.0)
+    # equal strings score 1.0 before any matching (1-char strings have
+    # window -1, so the formula alone would give 0)
+    jaro = np.where((la == lb) & ((A == Bm).sum(axis=1) == la), 1.0, jaro)
+    # Winkler boost: common prefix, at most 4 (pads never compare equal)
+    prefix = np.logical_and.accumulate(A[:, :4] == Bm[:, :4], axis=1).sum(axis=1)
+    return np.where(jaro > 0.7, jaro + prefix * 0.1 * (1.0 - jaro), jaro)
 
 
 @F.pandas_udf(T.DoubleType())
 def jaro_winkler(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Arrow-batched JW similarity (per-batch vector in, vector out).
-    Uses rapidfuzz's C implementation when available (10-100x on the
-    inner loop), pure-Python fallback otherwise — same semantics."""
-    if _HAVE_RAPIDFUZZ:
-        return pd.Series(
-            [
-                _RF_JW.normalized_similarity(x, y)
-                for x, y in zip(a.fillna(""), b.fillna(""))
-            ],
-            dtype="float64",
-        )
-    return pd.Series(
-        [jaro_winkler_py(x, y) for x, y in zip(a.fillna(""), b.fillna(""))], dtype="float64"
+    """Arrow-batched Jaro-Winkler similarity (standard Winkler: the
+    prefix boost applies only when jaro > 0.7, as in DuckDB). NULL reads
+    as ''. Equal strings are 1.0 without entering the kernel, so
+    comparing a column with itself costs O(rows) whatever the length."""
+    fa = a.fillna("").to_numpy(dtype=object)
+    fb = b.fillna("").to_numpy(dtype=object)
+    out = np.ones(len(fa), dtype=np.float64)
+    ne = np.flatnonzero(fa != fb)
+    out[ne] = _by_length_bucket(fa[ne], fb[ne], _jw_np)[0]
+    return pd.Series(out)
+
+
+def damerau_levenshtein_sim(a: Column, b: Column) -> Column:
+    """Normalized DL similarity in [0,1]: 1 - dist/max_len over the
+    unrestricted (Lowrance-Wagner) damerau_levenshtein_dist, so the two
+    siblings agree by construction (an earlier OSA variant here silently
+    disagreed with the dist/DuckDB-oracle semantics on transpose-then-
+    edit inputs like 'ca'->'abc'). NULL reads as ''."""
+    denom = F.greatest(
+        F.length(F.coalesce(a, F.lit(""))), F.length(F.coalesce(b, F.lit(""))), F.lit(1)
     )
-
-
-@F.pandas_udf(T.DoubleType())
-def damerau_levenshtein_sim(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Arrow-batched normalized DL similarity in [0,1]: 1 - dist/max_len
-    over the SAME unrestricted (Lowrance-Wagner) kernel as
-    damerau_levenshtein_dist — the two siblings must agree (an earlier
-    OSA variant here silently disagreed with the dist/DuckDB-oracle
-    semantics on transpose-then-edit inputs like 'ca'->'abc').
-    rapidfuzz C path when present, same as dist."""
-    if _HAVE_RAPIDFUZZ:
-        dist = (_RF_DL.distance(x, y) for x, y in zip(a.fillna(""), b.fillna("")))
-    else:
-        dist = (_dl_full(x, y) for x, y in zip(a.fillna(""), b.fillna("")))
-    out = [
-        1.0 - d / max(len(x), len(y), 1)
-        for d, (x, y) in zip(dist, zip(a.fillna(""), b.fillna("")))
-    ]
-    return pd.Series(out, dtype="float64")
+    return F.lit(1.0) - damerau_levenshtein_dist(a, b) / denom
 
 
 def _dl_full(a: str, b: str) -> int:
@@ -230,12 +226,7 @@ def _dl_full(a: str, b: str) -> int:
 @F.pandas_udf(T.IntegerType())
 def damerau_levenshtein_dist(a: pd.Series, b: pd.Series) -> pd.Series:
     """Arrow-batched unrestricted DL edit distance (oracle-compatible
-    with DuckDB damerau_levenshtein). rapidfuzz C path when present."""
-    if _HAVE_RAPIDFUZZ:
-        return pd.Series(
-            [_RF_DL.distance(x, y) for x, y in zip(a.fillna(""), b.fillna(""))],
-            dtype="int32",
-        )
+    with DuckDB damerau_levenshtein). NULL reads as ''."""
     return pd.Series(
         [_dl_full(x, y) for x, y in zip(a.fillna(""), b.fillna(""))], dtype="int32"
     )
@@ -382,8 +373,9 @@ def metaphone(col: pd.Series) -> pd.Series:
 # both strings, walks zip_longest over their characters accumulating
 # the two prefixes, computes the base similarity of each aligned prefix
 # pair, and returns the mean — i.e. for L = max(len(a), len(b)):
-# mean_{i=1..L} sim(a[:i], b[:i]). O(L^2) per pair, so callers cap the
-# input length (the pair queries already compare bounded substrings).
+# mean_{i=1..L} sim(a[:i], b[:i]). O(L^3) per pair (L prefixes of an
+# O(L^2) sim), so callers cap the input length (the pair queries
+# already compare bounded substrings).
 #
 # Cross-engine determinism: each per-prefix similarity is quantized to
 # 1e-4 via floor(x*10000 + 0.5) BEFORE summation, the sum is exact
@@ -394,208 +386,70 @@ def metaphone(col: pd.Series) -> pd.Series:
 _GSIM_Q = 10000
 
 
-def _generalized_py(sim_fn, s1: str, s2: str) -> float:
-    """Scalar prefix-averaged similarity with quantized accumulation."""
-    if not s1 or not s2:
-        return 0.0
-    s1, s2 = s1.lower(), s2.lower()
-    n = max(len(s1), len(s2))
-    total = 0
-    for i in range(1, n + 1):
-        total += int(sim_fn(s1[:i], s2[:i]) * _GSIM_Q + 0.5)
-    v = total / (n * float(_GSIM_Q))
-    return int(v * _GSIM_Q + 0.5) / float(_GSIM_Q)
-
-
-def _encode_batch(sa: "np.ndarray", sb: "np.ndarray"):
-    """(A, Bm, la, lb, L) code matrices for a batch of lowered strings.
-    Pad cells are zero — every consumer masks comparisons by the real
-    per-row lengths, so the pad value is never semantically read."""
-    import numpy as np
-
-    n_rows = len(sa)
-    la = np.fromiter((len(x) for x in sa), dtype=np.int64, count=n_rows)
-    lb = np.fromiter((len(x) for x in sb), dtype=np.int64, count=n_rows)
-    L = int(max(la.max(initial=0), lb.max(initial=0)))
-    if L == 0:
-        return None, None, la, lb, 0
-    # one big utf-32 encode beats a per-row frombuffer loop ~10x
-    A = np.frombuffer(
-        "".join(x.ljust(L, "\x00") for x in sa).encode("utf-32-le"), np.int32
-    ).reshape(n_rows, L)
-    Bm = np.frombuffer(
-        "".join(y.ljust(L, "\x00") for y in sb).encode("utf-32-le"), np.int32
-    ).reshape(n_rows, L)
-    return A, Bm, la, lb, L
-
-
-def _gjw_batch_np(sa: "np.ndarray", sb: "np.ndarray") -> "np.ndarray":
-    """Vectorized prefix-averaged Jaro-Winkler over a whole Arrow batch
-    (numpy, no per-row Python). Bit-identical to
-    _generalized_py(jaro_winkler_py, ...): same greedy matching, same
-    transposition count, same IEEE expression order in the jaro/boost
-    formulas, same 1e-4 quantization. Inputs are object arrays of
-    already-lowercased strings (NaN-filled upstream). Cost is
-    O(L^4) vector ops over the batch — callers gate on small L (the
-    operator contract caps inputs; the entry query uses 12 chars)."""
-    import numpy as np
-
-    n_rows = len(sa)
-    A, Bm, la, lb, L = _encode_batch(sa, sb)
-    if L == 0:
-        return np.zeros(n_rows, dtype=np.float64)
-    n_pref = np.maximum(la, lb)  # prefix-loop bound per row
-    total = np.zeros(n_rows, dtype=np.int64)
-    idx = np.arange(L)
-    for i in range(1, L + 1):
-        live = (i <= n_pref) & (la > 0) & (lb > 0)
-        la_i = np.minimum(la, i)
-        lb_i = np.minimum(lb, i)
-        md = np.maximum(la_i, lb_i) // 2 - 1  # match window; -1 => none
-        s1m = np.zeros((n_rows, i), dtype=bool)
-        s2m = np.zeros((n_rows, i), dtype=bool)
-        for ii in range(i):
-            found = np.zeros(n_rows, dtype=bool)
-            row_ok = live & (ii < la_i)
-            for jj in range(i):
-                cand = (
-                    ~found
-                    & row_ok
-                    & (jj < lb_i)
-                    & (abs(ii - jj) <= md)
-                    & (A[:, ii] == Bm[:, jj])
-                    & ~s2m[:, jj]
-                )
-                s2m[:, jj] |= cand
-                found |= cand
-            s1m[:, ii] = found
-        m = s1m.sum(axis=1)
-        # compact matched chars in order on both sides, count mismatches
-        seq_a = np.full((n_rows, i), -9, dtype=np.int32)
-        seq_b = np.full((n_rows, i), -9, dtype=np.int32)
-        ra, ca = np.nonzero(s1m)
-        seq_a[ra, (np.cumsum(s1m, axis=1) - 1)[ra, ca]] = A[ra, ca]
-        rb, cb = np.nonzero(s2m)
-        seq_b[rb, (np.cumsum(s2m, axis=1) - 1)[rb, cb]] = Bm[rb, cb]
-        in_m = idx[None, :i] < m[:, None]
-        t = ((seq_a != seq_b) & in_m).sum(axis=1) // 2
-        mf = m.astype(np.float64)
-        safe_m = np.maximum(m, 1)
-        # exact expression order of _jaro's return (denominators clamped
-        # to 1 only where the row is dead and masked out below)
-        jaro = (mf / np.maximum(la_i, 1) + mf / np.maximum(lb_i, 1) + (mf - t) / safe_m) / 3.0
-        jaro = np.where(m > 0, jaro, 0.0)
-        # _jaro's s1 == s2 shortcut: equal 1-char prefixes would get
-        # match window -1 => 0 matches via the formula, but the scalar
-        # path returns 1.0 before ever computing the window
-        in_a = idx[None, :i] < la_i[:, None]
-        eq = (la_i == lb_i) & ((A[:, :i] == Bm[:, :i]) | ~in_a).all(axis=1)
-        jaro = np.where(eq, 1.0, jaro)
-        # winkler boost: common prefix of the TRUNCATED strings, cap 4
-        pl = np.zeros(n_rows, dtype=np.int64)
-        still = np.ones(n_rows, dtype=bool)
-        for c in range(min(4, i)):
-            still = still & (c < la_i) & (c < lb_i) & (A[:, c] == Bm[:, c])
-            pl += still
-        jw = np.where(jaro > 0.7, jaro + pl * 0.1 * (1.0 - jaro), jaro)
-        q = np.floor(jw * _GSIM_Q + 0.5).astype(np.int64)
-        total += np.where(live, q, 0)
-    v = total / (np.maximum(n_pref, 1) * float(_GSIM_Q))
+def _gsim_mean(total: np.ndarray, la: np.ndarray, lb: np.ndarray) -> np.ndarray:
+    """Mean of the quantized per-prefix sums over max(la, lb) prefixes,
+    quantized again; 0.0 where either string is empty."""
+    v = total / (np.maximum(np.maximum(la, lb), 1) * float(_GSIM_Q))
     out = np.floor(v * _GSIM_Q + 0.5) / float(_GSIM_Q)
     return np.where((la > 0) & (lb > 0), out, 0.0)
+
+
+def _gjw_batch_np(A: np.ndarray, Bm: np.ndarray, la: np.ndarray, lb: np.ndarray) -> np.ndarray:
+    """Prefix-averaged Jaro-Winkler kernel (``_by_length_bucket``
+    layout; A/Bm already lowercased): ``_jw_np`` once per prefix length
+    i on the rows still live at i, each value quantized to 1e-4 before
+    the exact int64 sum."""
+    n_pref = np.maximum(la, lb)
+    total = np.zeros(len(A), dtype=np.int64)
+    for i in range(1, A.shape[1] + 1):
+        live = np.flatnonzero((i <= n_pref) & (la > 0) & (lb > 0))
+        jw = _jw_np(A[live, :i], Bm[live, :i], np.minimum(la[live], i), np.minimum(lb[live], i))
+        total[live] += np.floor(jw * _GSIM_Q + 0.5).astype(np.int64)
+    return _gsim_mean(total, la, lb)
+
+
+def _lowered(col: pd.Series) -> np.ndarray:
+    return col.fillna("").astype(str).str.lower().to_numpy(dtype=object)
 
 
 @F.pandas_udf(T.DoubleType())
 def generalized_jaro_winkler(a: pd.Series, b: pd.Series) -> pd.Series:
     """Prefix-averaged Jaro-Winkler (reference
-    get_generalized_jw_similarity, mlir.py:374-391), Arrow-batched.
-    Short inputs (max len <= 16 in the batch — the operator's
-    documented cap regime) run fully vectorized in numpy; longer
-    strings fall back to the scalar loop, whose semantics the
-    vectorized path replicates bit-for-bit (fuzz-pinned)."""
-    import numpy as np
-
-    fa = a.fillna("").astype(str).str.lower().to_numpy(dtype=object)
-    fb = b.fillna("").astype(str).str.lower().to_numpy(dtype=object)
-    max_len = 0
-    for x in fa:
-        if len(x) > max_len:
-            max_len = len(x)
-    for y in fb:
-        if len(y) > max_len:
-            max_len = len(y)
-    if max_len <= 16:
-        return pd.Series(_gjw_batch_np(fa, fb), dtype="float64")
-    return pd.Series(
-        [_generalized_py(jaro_winkler_py, x, y) for x, y in zip(fa, fb)],
-        dtype="float64",
-    )
+    get_generalized_jw_similarity, mlir.py:374-391), Arrow-batched
+    through the vectorized ``_gjw_batch_np`` kernel at any length."""
+    return pd.Series(_by_length_bucket(_lowered(a), _lowered(b), _gjw_batch_np)[0])
 
 
-def _glev_batch_np(sa: "np.ndarray", sb: "np.ndarray") -> "np.ndarray":
-    """Vectorized prefix-averaged Levenshtein ratio over a whole Arrow
-    batch. ONE (L+1)x(L+1) DP over the batch yields lev(a[:p], b[:q])
-    for EVERY (p, q) at once — the per-prefix values are the clamped
-    diagonal reads D[min(la,i), min(lb,i)], so all L prefix distances
-    cost a single DP instead of L separate levenshtein calls.
-    Bit-identical to generalized_levenshtein_ratio's JVM column
+def _glev_batch_np(A: np.ndarray, Bm: np.ndarray, la: np.ndarray, lb: np.ndarray) -> np.ndarray:
+    """Prefix-averaged Levenshtein-ratio kernel (``_by_length_bucket``
+    layout). ONE unit-cost DP over the rows, swept a row p at a time,
+    yields every prefix distance lev(a[:i], b[:i]) = D[min(la,i),
+    min(lb,i)] as the sweep passes it, so all L prefix distances cost a
+    single DP in O(L) rows of memory instead of L separate levenshtein
+    calls. Bit-identical to generalized_levenshtein_ratio's JVM column
     algebra: same 1.0 - lev/i expression, same 1e-4 quantization,
     same NULL/empty posture (pinned by pytest)."""
-    import numpy as np
-
-    n_rows = len(sa)
-    A, Bm, la, lb, L = _encode_batch(sa, sb)
-    if L == 0:
-        return np.zeros(n_rows, dtype=np.float64)
-    # bound the DP cube to ~48 MB transient: at the 64-char gate a full
-    # 10k-row Arrow batch would otherwise allocate (65*65*10000*4) ≈
-    # 169 MB per concurrent batch (review catch) — slice rows instead
-    max_rows = max(1, (48 << 20) // (4 * (L + 1) * (L + 1)))
-    if n_rows > max_rows:
-        return np.concatenate(
-            [
-                _glev_batch_np(sa[k : k + max_rows], sb[k : k + max_rows])
-                for k in range(0, n_rows, max_rows)
-            ]
-        )
-    # D[p, q, r] = lev(a_r[:p], b_r[:q]); cells with p > la_r or
-    # q > lb_r are never read (reads clamp to min(len, i))
-    D = np.empty((L + 1, L + 1, n_rows), dtype=np.int32)
-    D[:, 0, :] = np.arange(L + 1, dtype=np.int32)[:, None]
-    D[0, :, :] = np.arange(L + 1, dtype=np.int32)[:, None]
+    n_rows, L = A.shape
+    rows = np.arange(n_rows)
+    # row[q, r] = D[p, q] = lev(a_r[:p], b_r[:q]); lev[i, r] = lev(a_r[:i], b_r[:i])
+    row = np.repeat(np.arange(L + 1, dtype=np.int32)[:, None], n_rows, axis=1)
+    lev = np.zeros((L + 1, n_rows), dtype=np.int32)
     for p in range(1, L + 1):
+        prev, row = row, np.empty_like(row)
+        row[0] = p
         ap = A[:, p - 1]
         for q in range(1, L + 1):
             cost = (ap != Bm[:, q - 1]).astype(np.int32)
-            D[p, q] = np.minimum(
-                np.minimum(D[p - 1, q], D[p, q - 1]) + 1, D[p - 1, q - 1] + cost
-            )
-    rows = np.arange(n_rows)
-    n_pref = np.maximum(la, lb)
-    total = np.zeros(n_rows, dtype=np.int64)
-    for i in range(1, L + 1):
-        lev_i = D[np.minimum(la, i), np.minimum(lb, i), rows].astype(np.int64)
-        ratio = 1.0 - lev_i / i
-        q_i = np.floor(ratio * _GSIM_Q + 0.5).astype(np.int64)
-        total += np.where(i <= n_pref, q_i, 0)
-    v = total / (np.maximum(n_pref, 1) * float(_GSIM_Q))
-    out = np.floor(v * _GSIM_Q + 0.5) / float(_GSIM_Q)
-    return np.where((la > 0) & (lb > 0), out, 0.0)
-
-
-def _lev_py(s1: str, s2: str) -> int:
-    """Plain unit-cost Levenshtein (fallback path for uncapped inputs)."""
-    if s1 == s2:
-        return 0
-    if len(s1) < len(s2):
-        s1, s2 = s2, s1
-    prev = list(range(len(s2) + 1))
-    for i, c1 in enumerate(s1, 1):
-        cur = [i]
-        for j, c2 in enumerate(s2, 1):
-            cur.append(min(prev[j] + 1, cur[-1] + 1, prev[j - 1] + (c1 != c2)))
-        prev = cur
-    return prev[-1]
+            row[q] = np.minimum(np.minimum(prev[q], row[q - 1]) + 1, prev[q - 1] + cost)
+        # prefix i = p reads D[p, min(p, lb)] while p <= la; past la,
+        # prefix i reads D[la, i] (i <= lb there), all on row p = la
+        lev[p] = np.where(p <= la, row[np.minimum(p, lb), rows], lev[p])
+        ends = la == p
+        lev[p + 1 :, ends] = row[p + 1 :, ends]
+    i = np.arange(1, L + 1)[:, None]
+    q_i = np.floor((1.0 - lev[1:] / i) * _GSIM_Q + 0.5).astype(np.int64)
+    total = np.where(i <= np.maximum(la, lb), q_i, 0).sum(axis=0)
+    return _gsim_mean(total, la, lb)
 
 
 @F.pandas_udf(
@@ -609,34 +463,11 @@ def _lev_py(s1: str, s2: str) -> int:
 def generalized_sims(a: pd.Series, b: pd.Series) -> pd.DataFrame:
     """Fused prefix-averaged JW + Levenshtein-ratio in ONE Arrow pass —
     the hot-path form of (generalized_jaro_winkler,
-    generalized_levenshtein_ratio): one batch encode, one vectorized
-    JW sweep, one shared-DP Levenshtein sweep, one transfer back.
-    Values are bit-identical to the two individual functions (pinned
-    by pytest + the doc_generalized_sims DuckDB oracle). Capped
-    inputs (the operator contract) stay fully vectorized; longer
-    strings fall back to scalar loops with the same semantics."""
-    import numpy as np
-
-    fa = a.fillna("").astype(str).str.lower().to_numpy(dtype=object)
-    fb = b.fillna("").astype(str).str.lower().to_numpy(dtype=object)
-    max_len = max(
-        max((len(x) for x in fa), default=0), max((len(y) for y in fb), default=0)
-    )
-    if max_len <= 16:
-        gjw = _gjw_batch_np(fa, fb)
-    else:
-        gjw = np.array(
-            [_generalized_py(jaro_winkler_py, x, y) for x, y in zip(fa, fb)]
-        )
-    if max_len <= 64:
-        glev = _glev_batch_np(fa, fb)
-    else:
-        glev = np.array(
-            [
-                _generalized_py(lambda p1, p2: 1.0 - _lev_py(p1, p2) / max(len(p1), len(p2)), x, y)
-                for x, y in zip(fa, fb)
-            ]
-        )
+    generalized_levenshtein_ratio): one encode per length bucket, one
+    vectorized JW sweep, one shared-DP Levenshtein sweep, one transfer
+    back. Values are bit-identical to the two individual functions
+    (pinned by pytest + the doc_generalized_sims DuckDB oracle)."""
+    gjw, glev = _by_length_bucket(_lowered(a), _lowered(b), _gjw_batch_np, _glev_batch_np)
     return pd.DataFrame({"gjw": gjw, "glev": glev})
 
 

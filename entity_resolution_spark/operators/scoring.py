@@ -304,6 +304,9 @@ def score_pairs_two_phase(
         )
         .withColumn(
             "jw_title",
+            # the UDF still runs on every survivor (see the docstring);
+            # kept: a filter-plus-union would attach the wide features
+            # twice, and the vectorized JW costs little per survivor
             F.when(
                 sim_cond, jaro_winkler(F.col("norm_title_1"), F.col("norm_title_2"))
             ).otherwise(F.lit(0.0)),

@@ -86,10 +86,9 @@ GSIM_PAIRS = [
 
 
 def test_generalized_jw_matches_reference_loop(spark):
-    from entity_resolution_spark.functions.similarity import (
-        generalized_jaro_winkler,
-        jaro_winkler_py,
-    )
+    from similarity_oracles import jaro_winkler_py
+
+    from entity_resolution_spark.functions.similarity import generalized_jaro_winkler
 
     df = spark.createDataFrame(
         [(i, a, b) for i, (a, b) in enumerate(GSIM_PAIRS)], "i INT, a STRING, b STRING"
@@ -140,31 +139,35 @@ def test_generalized_lev_matches_reference_loop(spark):
 
 
 def test_gjw_vectorized_matches_scalar_loop():
-    """The numpy batch path must be BIT-identical to the scalar
-    _generalized_py(jaro_winkler_py) loop it replaced on the hot path
+    """The numpy prefix kernel must be BIT-identical to the scalar
+    _generalized_py(jaro_winkler_py) loop at every length 0-64
     (quantized doubles compare with ==, not a tolerance)."""
     import random
 
     import numpy as np
+    from similarity_oracles import _generalized_py, jaro_winkler_py
 
     from entity_resolution_spark.functions.similarity import (
-        _generalized_py,
+        _by_length_bucket,
         _gjw_batch_np,
-        jaro_winkler_py,
     )
 
     rng = random.Random(7)
     alpha = "abcdefg XYZ0éß"
-    cases = ["", "a", "aa", "ab", "ba", "abc"]
-    cases += [
-        "".join(rng.choice(alpha) for _ in range(rng.randint(0, 16)))
-        for _ in range(800)
-    ]
+
+    def rand_str(lo, hi):
+        return "".join(rng.choice(alpha) for _ in range(rng.randint(lo, hi)))
+
+    cases = ["", "a", "aa", "ab", "ba", "abc"] + [rand_str(0, 16) for _ in range(800)]
     pairs = [(rng.choice(cases), rng.choice(cases)) for _ in range(2000)]
     pairs += [("a", "a"), ("ab", "ba"), ("", "x"), ("martha", "marhta")]
+    # above 16 chars: mixed with short rows so several length buckets
+    # share one batch; the scalar oracle costs ~ms per pair here
+    pairs += [(rand_str(17, 64), rand_str(0, 64)) for _ in range(300)]
+    pairs += [(x, x[1:] + x[:1]) for x, _ in pairs[-20:]]  # near-duplicates
     sa = np.array([x.lower() for x, _ in pairs], dtype=object)
     sb = np.array([y.lower() for _, y in pairs], dtype=object)
-    got = _gjw_batch_np(sa, sb)
+    got = _by_length_bucket(sa, sb, _gjw_batch_np)[0]
     for k, (x, y) in enumerate(pairs):
         assert got[k] == _generalized_py(jaro_winkler_py, x, y), (x, y)
 
@@ -190,10 +193,10 @@ def test_fused_generalized_sims_matches_individual_columns(spark):
 
     vals = ["", "a", "ab", "ba", None] + [rand_str(0, 16) for _ in range(400)]
     short_rows = [(i, rng.choice(vals), rng.choice(vals)) for i in range(1200)]
-    # above the 16-char JW gate: scalar gjw, still the vectorized
-    # _glev_batch_np (up to its 64-char gate). Few rows — the scalar
-    # prefix JW costs tens of ms per pair at these lengths.
     long_rows = [(i, rand_str(17, 64), rand_str(17, 64)) for i in range(300)]
+    # 65-120 chars pins the shared-DP prefix Levenshtein there against
+    # the JVM column algebra; few rows, as the JVM HOF is O(L^3) per pair
+    long_rows += [(300 + i, rand_str(65, 120), rand_str(65, 120)) for i in range(8)]
     for rows in (short_rows, long_rows):
         df = spark.createDataFrame(rows, "i long, a string, b string")
         out = (
