@@ -1794,7 +1794,7 @@ def _minhash_side_ctes(
 
 
 def _minhash_est_gate_terms(num_perm: int, threshold: float) -> tuple[str, float]:
-    from entity_resolution_spark.operators.dedup import minhash_verify_gate
+    from entity_resolution_spark.functions.similarity import minhash_verify_gate
 
     est_terms = " + ".join(
         f"(CASE WHEN sx.s{i} = sy.s{i} THEN 1 ELSE 0 END)" for i in range(num_perm)

@@ -55,6 +55,14 @@ def minhash_jaccard_estimate(sig_a: Column, sig_b: Column) -> Column:
     return agree / F.greatest(F.size(sig_a), F.lit(1))
 
 
+def minhash_verify_gate(threshold: float, num_perm: int, sigmas: float = 3.0) -> float:
+    """Gate on minhash_jaccard_estimate for a two-phase verify:
+    threshold minus `sigmas` binomial standard deviations of the
+    num_perm-sample estimator, floored at 0."""
+    sigma = (threshold * (1.0 - threshold) / max(num_perm, 1)) ** 0.5
+    return max(0.0, threshold - sigmas * sigma)
+
+
 def cosine_similarity(a: Column, b: Column) -> Column:
     """Cosine over two array<numeric> columns — native fold, no UDF."""
     dot = F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v)

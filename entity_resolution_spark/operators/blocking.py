@@ -31,20 +31,15 @@ class BlockingConfig:
     bands: int = 32
     rows_per_band: int = 2
     key_cap: int = DEFAULT_KEY_CAP
-    use_domain_key: bool = True
-    cross_lang: bool = False  # pages in different languages never pair
-    # keys with (salt_threshold, key_cap] members are split into n_salts
-    # sub-keys (north_rule: "salted, repartitioned"). Recall inside a
-    # salted key drops to in-salt pairs — safe for the domain key, which
-    # is redundant with the LSH band keys for any pair similar enough
-    # to match. 0 disables.
+    # domain keys with (salt_threshold, key_cap] members are split into
+    # n_salts sub-keys (north_rule: "salted, repartitioned"). Recall
+    # inside a salted key drops to in-salt pairs — safe for the domain
+    # key, which is redundant with the LSH band keys for any pair
+    # similar enough to match; a hot band key may be the ONLY key a
+    # true pair shares, so band keys are never salted (round-2
+    # advisory). 0 disables.
     salt_threshold: int = 1_000
     n_salts: int = 8
-    # restrict salting to domain keys: a hot LSH band key may be the
-    # ONLY key a true pair shares, so salting it loses cross-salt
-    # recall; the domain key is the one key that is redundant by design
-    # (round-2 advisory). False salts every hot key.
-    salt_domain_only: bool = True
     # 'md5' = oracle-reproducible band keys (raw md5 of the signature
     # slice, hashing.py:lsh_band_keys); 'xxhash64' = production path.
     hash_mode: str = "xxhash64"
@@ -52,24 +47,21 @@ class BlockingConfig:
 
 def block_keys(features: DataFrame, cfg: BlockingConfig = BlockingConfig()) -> DataFrame:
     """features(url_id, domain, lang, minhash_sig, ...) ->
-    blocks(url_id, block_key) — one row per (record, key), deduped.
+    blocks(url_id, block_key) — one row per (record, key), deduped:
+    the LSH band keys plus one `domain:` key.
 
     Keys are language-scoped (cross-language pages must not merge,
-    FIXTURES.md §1) unless cfg.cross_lang.
+    FIXTURES.md §1).
     """
     keys = lsh_band_keys(F.col("minhash_sig"), cfg.bands, cfg.rows_per_band, cfg.hash_mode)
-    if cfg.use_domain_key:
-        keys = F.array_union(keys, F.array(F.concat(F.lit("domain:"), F.col("domain"))))
-    if not cfg.cross_lang:
-        # coalesce: F.concat null-propagates, so a null lang would null
-        # EVERY key and silently exclude the record from all candidate
-        # generation (stamped a singleton with no warning — round-3
-        # review finding). Unknown-language pages share one "und" scope
-        # instead; doc_langid can stamp a real code upstream.
-        lang = F.coalesce(F.col("lang"), F.lit("und"))
-        scoped = F.transform(keys, lambda k: F.concat(lang, F.lit("|"), k))
-    else:
-        scoped = keys
+    keys = F.array_union(keys, F.array(F.concat(F.lit("domain:"), F.col("domain"))))
+    # coalesce: F.concat null-propagates, so a null lang would null
+    # EVERY key and silently exclude the record from all candidate
+    # generation (stamped a singleton with no warning — round-3
+    # review finding). Unknown-language pages share one "und" scope
+    # instead; doc_langid can stamp a real code upstream.
+    lang = F.coalesce(F.col("lang"), F.lit("und"))
+    scoped = F.transform(keys, lambda k: F.concat(lang, F.lit("|"), k))
     return (
         features.select("url_id", F.explode(scoped).alias("block_key"))
         .filter(F.col("block_key").isNotNull() & (F.length("block_key") > 0))

@@ -32,7 +32,7 @@ from entity_resolution_spark.functions.hashing import (
     simhash64,
     simhash_hamming,
 )
-from entity_resolution_spark.functions.similarity import token_jaccard
+from entity_resolution_spark.functions.similarity import minhash_verify_gate, token_jaccard
 from entity_resolution_spark.functions.text import fingerprint, rolling_fingerprints
 from entity_resolution_spark.normalize import tokens
 from entity_resolution_spark.operators.blocking import cap_key_frequency
@@ -500,14 +500,6 @@ def minhash_lsh_dedup_against(
         )
         .filter(F.col("jaccard") >= threshold)
     )
-
-
-def minhash_verify_gate(threshold: float, num_perm: int, sigmas: float = 3.0) -> float:
-    """Estimate gate for the two-phase verify: threshold minus
-    `sigmas` binomial standard deviations of the num_perm-sample
-    estimator, floored at 0."""
-    sigma = (threshold * (1.0 - threshold) / max(num_perm, 1)) ** 0.5
-    return max(0.0, threshold - sigmas * sigma)
 
 
 def simhash_dedup(

@@ -33,15 +33,13 @@ from entity_resolution_spark.operators.connected_components import connected_com
 from entity_resolution_spark.operators.pairs import candidate_pairs
 from entity_resolution_spark.operators.scoring import (
     ScoringConfig,
+    broadcastable,
     deterministic_match_pass,
     edges_from_scores,
-    resolve_broadcast,
     score_pairs_two_phase,
 )
 from entity_resolution_spark.operators.stamping import stamp_entities
 from entity_resolution_spark.sources.checkpoint import StageCheckpointer
-
-PAIR_FEATURE_COLS = ["fingerprint", "shingles", "norm_title", "text_prefix"]
 
 
 @dataclass(frozen=True)
@@ -49,11 +47,6 @@ class PipelineConfig:
     features: FeatureConfig = field(default_factory=FeatureConfig)
     blocking: BlockingConfig = field(default_factory=BlockingConfig)
     scoring: ScoringConfig = field(default_factory=ScoringConfig)
-    # reference stage-6 structure: deterministic exact-match pass whose
-    # edges are NOT-EXISTS-subtracted from the probabilistic input
-    # (Orchestrate_Demo.py:360). Off -> exact dups score 1.0 inside the
-    # probabilistic path instead; same components either way.
-    deterministic_prepass: bool = True
 
     def fingerprint(self) -> str:
         return hashlib.sha256(json.dumps(asdict(self), sort_keys=True).encode()).hexdigest()[:16]
@@ -80,13 +73,6 @@ class EntityResolutionPipeline:
                 "ScoringConfig.num_perm must match FeatureConfig.num_perm "
                 f"({self.config.scoring.num_perm} != {self.config.features.num_perm}): "
                 "the estimate gate is calibrated to the signature length"
-            )
-        if self.config.scoring.prefix_len != self.config.features.prefix_len:
-            raise ValueError(
-                "ScoringConfig.prefix_len must match FeatureConfig.prefix_len "
-                f"({self.config.scoring.prefix_len} != {self.config.features.prefix_len}): "
-                "text_prefix is built by featurize — tuning only the scoring "
-                "side would silently have no effect"
             )
         bands = self.config.blocking.bands
         rows = self.config.blocking.rows_per_band
@@ -124,7 +110,7 @@ class EntityResolutionPipeline:
                 salt_threshold=self.config.blocking.salt_threshold,
                 n_salts=self.config.blocking.n_salts,
                 hash_mode=self.config.blocking.hash_mode,
-                only_containing="domain:" if self.config.blocking.salt_domain_only else None,
+                only_containing="domain:",
             )
         return capped, stats
 
@@ -151,8 +137,11 @@ class EntityResolutionPipeline:
             # the 03_features parquet stage write. Blocks are freed by
             # the ContextCleaner when the result is dropped.
             feats = feats.localCheckpoint(eager=True)
-        # blocking + key stats (metrics: dropped-hot accounting)
-        if ckpt is not None and ckpt.is_complete("04_blocks"):
+        # blocking + key stats (metrics: dropped-hot accounting). One
+        # unit for resume: a run killed between the two writes left
+        # blocks without stats, so both are recomputed unless both are
+        # complete.
+        if ckpt is not None and all(map(ckpt.is_complete, ("04_blocks", "04_key_stats"))):
             blocks = ckpt.read("04_blocks")
             stats = ckpt.read("04_key_stats")
         else:
@@ -168,9 +157,9 @@ class EntityResolutionPipeline:
         self, feats: DataFrame, pairs: DataFrame, checkpoint_dir: str | None = None
     ) -> tuple[DataFrame | None, DataFrame]:
         """(feats, pairs) -> (det_edges, scored): deterministic
-        exact-match pre-pass (None when disabled or skipped on resume)
-        -> two-phase scoring of the remaining pairs, resuming stage 06
-        from checkpoint_dir."""
+        exact-match pre-pass (None when skipped on resume) -> two-phase
+        scoring of the remaining pairs, resuming stage 06 from
+        checkpoint_dir."""
         ckpt = self._checkpointer(feats.sparkSession, checkpoint_dir)
         # the pass eagerly materializes its pair-fingerprint attach —
         # skip it when the components checkpoint is complete (its only
@@ -178,19 +167,15 @@ class EntityResolutionPipeline:
         # from parquet and the eager join would be pure waste on every
         # resume)
         det_edges = None
-        if self.config.deterministic_prepass and not (
-            ckpt is not None and ckpt.is_complete("08_components")
-        ):
+        if ckpt is None or not ckpt.is_complete("08_components"):
             det_edges, pairs = deterministic_match_pass(
                 pairs,
                 feats,
-                # size-resolved per run (round-4 verdict: a fixed True
-                # default OOMs at scale); only the 8-byte fingerprint
-                # rides this attach so auto broadcasts it far longer
-                # than the wide phase-2 payload.
-                broadcast=resolve_broadcast(
-                    self.config.scoring, feats, ["fingerprint"]
-                ),
+                # sized per run (round-4 verdict: a fixed True default
+                # OOMs at scale); only the 8-byte fingerprint rides this
+                # attach, so it stays broadcastable far longer than the
+                # wide phase-2 payload.
+                broadcast=broadcastable(feats, ["fingerprint"]),
             )
         return det_edges, _staged(ckpt, "06_scored", lambda: self.score(pairs, feats))
 

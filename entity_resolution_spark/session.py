@@ -91,7 +91,9 @@ def get_spark(
         # the projected feature payload is modest; the 10 MB default
         # forces a sort-merge join that shuffles the (much larger)
         # pair stream twice per attach. 64 MB is safe at executor
-        # memory >= 4g and lets AQE pick broadcast at runtime too.
+        # memory >= 4g and lets AQE pick broadcast at runtime too. It is
+        # the one broadcast budget: scoring.broadcastable reads it from
+        # the session to pin the ER feature attaches.
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
         .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "64m")
         # Arrow for every pandas UDF / toPandas boundary.

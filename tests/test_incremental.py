@@ -60,6 +60,13 @@ def test_resume_skips_completed_stages(spark, corpus, tmp_path):
     b = EntityResolutionPipeline(cfg).run(pages, checkpoint_dir=ckpt)
     rows_b = sorted((r["url"], r["entity_id"]) for r in b.collect())
     assert rows_a == rows_b
+    # killed between the 04_blocks and 04_key_stats writes: blocks are
+    # complete, key stats and everything after are missing
+    for stage in ("04_key_stats", "05_pairs", "06_scored", "08_components", "09_entities"):
+        shutil.rmtree(os.path.join(ckpt, stage))
+    c = EntityResolutionPipeline(cfg).run(pages, checkpoint_dir=ckpt)
+    rows_c = sorted((r["url"], r["entity_id"]) for r in c.collect())
+    assert rows_a == rows_c
 
 
 def test_manifest_lineage(spark, corpus, tmp_path):

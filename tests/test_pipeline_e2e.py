@@ -9,6 +9,8 @@ from entity_resolution_spark.operators.blocking import BlockingConfig, block_key
 from entity_resolution_spark.operators.pairs import candidate_pairs
 from entity_resolution_spark.plans.pipeline import EntityResolutionPipeline, PipelineConfig
 
+PAIR_FEATURE_COLS = ["fingerprint", "shingles", "norm_title", "text_prefix"]
+
 
 @pytest.fixture(scope="module")
 def entities(spark, corpus):
@@ -130,7 +132,6 @@ def test_two_phase_equivalent_to_single_phase(spark, corpus):
         edges_from_scores,
         score_pairs_two_phase,
     )
-    from entity_resolution_spark.plans.pipeline import PAIR_FEATURE_COLS
 
     pages, _, _ = corpus
     pipe = EntityResolutionPipeline()
@@ -162,20 +163,27 @@ def test_oracle_hash_mode_meets_f1_gate(spark, corpus):
 def test_deterministic_prepass_equivalent_and_subtracts(spark, corpus):
     """The deterministic exact-match pre-pass (reference stage-6 shape,
     Orchestrate_Demo.py:360) must not change the final entities, and
-    must shrink the candidate stream entering probabilistic scoring."""
-    from entity_resolution_spark.operators.scoring import deterministic_match_pass
+    must shrink the candidate stream entering probabilistic scoring.
+    Without the pass, exact dups score 1.0 inside two-phase scoring."""
+    from entity_resolution_spark.operators.connected_components import connected_components
+    from entity_resolution_spark.operators.scoring import (
+        deterministic_match_pass,
+        edges_from_scores,
+        score_pairs_two_phase,
+    )
+    from entity_resolution_spark.operators.stamping import stamp_entities
 
     pages, _, _ = corpus
-    on = EntityResolutionPipeline(PipelineConfig(deterministic_prepass=True)).run(pages)
-    off = EntityResolutionPipeline(PipelineConfig(deterministic_prepass=False)).run(pages)
+    pipe = EntityResolutionPipeline()
+    on = pipe.run(pages)
+    feats, pairs = pipe.candidates(pages)
+    cfg = pipe.config.scoring
+    edges = edges_from_scores(score_pairs_two_phase(pairs, feats, cfg), cfg.threshold)
+    off = stamp_entities(feats.select("url", "url_id", "warc_ts"), connected_components(edges))
     a = {r["url"]: r["entity_id"] for r in on.collect()}
     b = {r["url"]: r["entity_id"] for r in off.collect()}
     assert a == b
 
-    pipe = EntityResolutionPipeline()
-    feats = pipe.featurize(pages)
-    blocks, _ = pipe.block(feats)
-    pairs = candidate_pairs(blocks)
     det_edges, remaining = deterministic_match_pass(pairs, feats)
     n_pairs, n_det, n_rem = pairs.count(), det_edges.count(), remaining.count()
     assert n_det > 0  # the corpus plants exact dups
