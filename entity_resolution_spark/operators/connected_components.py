@@ -1,24 +1,43 @@
-"""Stage 8 — transitive clustering: connected components via the
-alternating large-star / small-star algorithm (Kiveris et al.,
-"Connected Components in MapReduce and Beyond", SoCC'14) expressed as
-pure DataFrame joins/aggregations.
+"""Stage 8 — transitive clustering: connected components, in one of
+two regimes chosen from the size of the distinct edge set.
 
-Replaces the reference's GraphFrames dependency
-(mlir.py:1837-1885) — same semantics, no native library, O(log n)
-rounds, every round a checkpointed shuffle so lineage stays bounded
-(the reason the reference had to call setCheckpointDir,
-mlir.py:1880).
+* Edge set within the session's broadcast budget
+  (``spark.sql.autoBroadcastJoinThreshold``, the budget Spark uses when
+  it collects a broadcast side to the driver): the edges are collected
+  once and labeled on the driver by a vectorized min-label +
+  pointer-jumping pass (union-find style hooking, see ``_label_local``).
+  One collect replaces the several Spark jobs of every star round.
+* Larger edge sets (or a budget of -1): the alternating large-star /
+  small-star algorithm (Kiveris et al., "Connected Components in
+  MapReduce and Beyond", SoCC'14) expressed as pure DataFrame
+  joins/aggregations, O(log n) rounds, every round a checkpointed
+  shuffle so lineage stays bounded (the reason the reference had to
+  call setCheckpointDir, mlir.py:1880).
+
+Both replace the reference's GraphFrames dependency (mlir.py:1837-1885)
+with the same semantics and no native library.
 
 Node ids may be any totally ordered type (the pipeline uses xxhash64
 url ids; raw string urls work too). Output: (id, component) where
 component = min id in the component — deterministic regardless of
-partitioning.
+partitioning, and identical in both regimes.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import BinaryType, StringType, StructField, StructType
+
+from entity_resolution_spark.util import broadcast_budget
+
+# bytes per id for the budget when ids are not strings/binary: the
+# widest fixed-width orderable type (long, double, timestamp)
+_FIXED_ID_BYTES = 8
+# name of the edge-set size metrics observed on the distinct-edge checkpoint
+_SIZE_METRIC = "connected_components_edge_set"
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -64,14 +83,55 @@ def _edge_checksum(edges: DataFrame) -> tuple[int, int]:
     return int(row["n"]), int(row["chk"])
 
 
+def _label_local(edges: DataFrame) -> DataFrame:
+    """Collect the (distinct, loop-free) edge set and label it on the
+    driver: the same (id, component = min id) rows the star rounds give.
+
+    Ids become ``pd.factorize(sort=True)`` codes, so the minimum code
+    is the minimum id (UTF-8 byte order equals code-point order for
+    strings). Each pass hooks both endpoints of every edge and their
+    current labels onto the smaller endpoint label, then pointer-jumps
+    labels to a fixed point. Labels only decrease and never exceed the
+    node's own code, so at the fixed point every edge joins two nodes
+    of equal label and that label is the component's minimum code.
+    """
+    id_type = edges.schema["src"].dataType
+    pdf = edges.toPandas()
+    n_edges = len(pdf)
+    codes, ids = pd.factorize(
+        np.concatenate([pdf["src"].to_numpy(), pdf["dst"].to_numpy()]), sort=True
+    )
+    src, dst = codes[:n_edges], codes[n_edges:]
+    label = np.arange(len(ids))
+    while True:
+        lo = np.minimum(label[src], label[dst])
+        new = label.copy()
+        np.minimum.at(new, np.concatenate([src, dst, label[src], label[dst]]), np.tile(lo, 4))
+        while not np.array_equal(jumped := new[new], new):
+            new = jumped
+        if np.array_equal(new, label):
+            break
+        label = new
+    schema = StructType([StructField("id", id_type), StructField("component", id_type)])
+    return edges.sparkSession.createDataFrame(
+        pd.DataFrame({"id": ids, "component": ids[label]}), schema
+    )
+
+
 def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
     """edges(src, dst) -> (id, component = min id in the component).
 
-    Iterates large-star/small-star to a fixed point (edge-set checksum
-    stable), localCheckpoint()ing each round to truncate lineage.
-    Raises RuntimeError if no fixed point is reached in ``max_iter``
-    rounds: the edge set is then not yet a star graph and reading
-    components off it would split real components.
+    Self-loops and duplicate edges are dropped and the distinct edge
+    set is localCheckpoint()ed once; its row count (and, for string or
+    binary ids, its summed byte length) is observed on that same job.
+    If the edge set fits the session's
+    ``spark.sql.autoBroadcastJoinThreshold`` it is labeled in one pass
+    on the driver (``_label_local``). Otherwise large-star/small-star
+    rounds iterate to a fixed point (edge-set checksum stable),
+    localCheckpoint()ing each round to truncate lineage, and raise
+    RuntimeError if none is reached in ``max_iter`` rounds: the edge
+    set is then not yet a star graph and reading components off it
+    would split real components. ``max_iter`` bounds star rounds only.
     Vertices that only appear as sources/dsts of self-loops or not at
     all are the caller's concern (singletons are stamped separately in
     the pipeline).
@@ -84,9 +144,23 @@ def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
     """
     if max_iter < 1:
         raise ValueError(f"connected_components needs max_iter >= 1, got {max_iter}")
-    cur = (
-        edges.select("src", "dst").filter(F.col("src") != F.col("dst")).distinct()
-    ).localCheckpoint()
+    distinct = edges.select("src", "dst").filter(F.col("src") != F.col("dst")).distinct()
+    metrics = [F.count(F.lit(1)).alias("n")]
+    if isinstance(distinct.schema["src"].dataType, (StringType, BinaryType)):
+        metrics.append(F.sum(F.octet_length("src") + F.octet_length("dst")).alias("bytes"))
+    observed = distinct.observe(_SIZE_METRIC, *metrics)
+    cur = observed.localCheckpoint()
+    # Read from the checkpointed query's own execution, not through a
+    # pyspark Observation: registering one gives the session an
+    # ObservationManager that Spark cannot serialize, and every later
+    # closure capturing the session (pyspark.ml model transforms) fails.
+    size = observed._jdf.queryExecution().observedMetrics().get(_SIZE_METRIC).get()
+    if size.length() > 1:
+        n_bytes = size.get(1) or 0  # a sum over no rows is null
+    else:
+        n_bytes = size.getLong(0) * 2 * _FIXED_ID_BYTES
+    if n_bytes <= broadcast_budget(cur.sparkSession):
+        return _label_local(cur)
     prev_sig: tuple[int, int] | None = None
     for _ in range(max_iter):
         cur = _small_star(_large_star(cur)).localCheckpoint()

@@ -25,6 +25,7 @@ from entity_resolution_spark.functions.similarity import (
     minhash_verify_gate,
     token_jaccard,
 )
+from entity_resolution_spark.util import broadcast_budget
 
 
 @dataclass(frozen=True)
@@ -103,8 +104,7 @@ def broadcastable(features: DataFrame, cols: list[str]) -> bool:
     size = _plan_size_bytes(features.select("url_id", *cols))
     if size is None:
         return False
-    conf = features.sparkSession._jsparkSession.sessionState().conf()
-    return size <= conf.autoBroadcastJoinThreshold()
+    return size <= broadcast_budget(features.sparkSession)
 
 
 def score_pairs_two_phase(

@@ -155,28 +155,26 @@ class EntityResolutionPipeline:
 
     def scored(
         self, feats: DataFrame, pairs: DataFrame, checkpoint_dir: str | None = None
-    ) -> tuple[DataFrame | None, DataFrame]:
+    ) -> tuple[DataFrame | None, DataFrame | None]:
         """(feats, pairs) -> (det_edges, scored): deterministic
-        exact-match pre-pass (None when skipped on resume) -> two-phase
-        scoring of the remaining pairs, resuming stage 06 from
-        checkpoint_dir."""
+        exact-match pre-pass -> two-phase scoring of the remaining
+        pairs, resuming stage 06 from checkpoint_dir. (None, None) when
+        the components checkpoint is complete: components are then read
+        from parquet, so neither output has a consumer (the pre-pass
+        eagerly materializes its attach, and a missing 06_scored would
+        otherwise be rescored and rewritten on every resume)."""
         ckpt = self._checkpointer(feats.sparkSession, checkpoint_dir)
-        # the pass eagerly materializes its pair-fingerprint attach —
-        # skip it when the components checkpoint is complete (its only
-        # consumers, edges and the scored-stage input, are then read
-        # from parquet and the eager join would be pure waste on every
-        # resume)
-        det_edges = None
-        if ckpt is None or not ckpt.is_complete("08_components"):
-            det_edges, pairs = deterministic_match_pass(
-                pairs,
-                feats,
-                # sized per run (round-4 verdict: a fixed True default
-                # OOMs at scale); only the 8-byte fingerprint rides this
-                # attach, so it stays broadcastable far longer than the
-                # wide phase-2 payload.
-                broadcast=broadcastable(feats, ["fingerprint"]),
-            )
+        if ckpt is not None and ckpt.is_complete("08_components"):
+            return None, None
+        det_edges, pairs = deterministic_match_pass(
+            pairs,
+            feats,
+            # sized per run (round-4 verdict: a fixed True default
+            # OOMs at scale); only the 8-byte fingerprint rides this
+            # attach, so it stays broadcastable far longer than the
+            # wide phase-2 payload.
+            broadcast=broadcastable(feats, ["fingerprint"]),
+        )
         return det_edges, _staged(ckpt, "06_scored", lambda: self.score(pairs, feats))
 
     # -- full run ---------------------------------------------------------
@@ -185,11 +183,14 @@ class EntityResolutionPipeline:
         component_size, first_seen)."""
         feats, pairs = self.candidates(pages, checkpoint_dir)
         det_edges, scored = self.scored(feats, pairs, checkpoint_dir)
-        edges = edges_from_scores(scored, self.config.scoring.threshold)
-        if det_edges is not None:
-            edges = edges.unionByName(det_edges)
         ckpt = self._checkpointer(pages.sparkSession, checkpoint_dir)
-        comps = _staged(ckpt, "08_components", lambda: connected_components(edges))
+        comps = _staged(
+            ckpt,
+            "08_components",
+            lambda: connected_components(
+                edges_from_scores(scored, self.config.scoring.threshold).unionByName(det_edges)
+            ),
+        )
         return _staged(
             ckpt,
             "09_entities",

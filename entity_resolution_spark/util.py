@@ -16,6 +16,13 @@ _WIDE_OPERATORS = frozenset(
 )
 
 
+def broadcast_budget(spark) -> int:
+    """The session's spark.sql.autoBroadcastJoinThreshold in bytes: the
+    one budget for a side Spark or this package collects to the driver
+    whole. -1 disables both."""
+    return spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+
+
 def fan_out(df: DataFrame, *key_cols: str) -> DataFrame:
     """Repartition a narrow input to cluster width before CPU-bound
     map stages (shingling, MinHash folds, Arrow UDFs, char-gram

@@ -1,6 +1,8 @@
-"""Large-star/small-star CC vs a union-find oracle on random graphs
-(SURVEY.md §5.1)."""
+"""Connected components vs a union-find oracle on random graphs
+(SURVEY.md §5.1), in both regimes: driver-side labeling within the
+session's broadcast budget, large-star/small-star rounds above it."""
 
+import contextlib
 import random
 
 import pytest
@@ -91,9 +93,70 @@ def test_string_ids(spark):
     }
 
 
+@contextlib.contextmanager
+def _star_rounds(spark):
+    """Budget -1: every edge set takes the large-star/small-star rounds."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
+
+
+def _path(spark, n=200):
+    return spark.createDataFrame([(i, i + 1) for i in range(n)], "src long, dst long")
+
+
 def test_unconverged_raises(spark):
     """One round cannot collapse a 201-node path into a star; returning
     that edge set would split the path into ~199 "components"."""
-    edges = spark.createDataFrame([(i, i + 1) for i in range(200)], "src long, dst long")
-    with pytest.raises(RuntimeError, match=r"max_iter=1 .*\d+ edges"):
-        connected_components(edges, max_iter=1)
+    with _star_rounds(spark), pytest.raises(RuntimeError, match=r"max_iter=1 .*\d+ edges"):
+        connected_components(_path(spark), max_iter=1)
+
+
+def test_local_and_star_paths_agree(spark):
+    """The driver-side labeling and the star rounds return the same
+    (id, component) rows under the same schema."""
+    rng = random.Random(11)
+    cases = [
+        spark.createDataFrame(
+            [(rng.randrange(200), rng.randrange(200)) for _ in range(150)], "src long, dst long"
+        ),
+        _path(spark),
+        # non-ASCII ids: Spark orders strings by UTF-8 bytes, pandas by
+        # code point; the two orders agree (UTF-16 order would not:
+        # U+1F600 sorts below U+FB01 there)
+        spark.createDataFrame(
+            [("é", "z"), ("z", "ä"), ("日本", "a"), ("a", "b"), ("Ω", "ω"), ("😀", "ﬁ")],
+            "src string, dst string",
+        ),
+        # self-loops and duplicate edges, in both orientations
+        spark.createDataFrame(
+            [(1, 1), (1, 2), (2, 1), (1, 2), (3, 3), (4, 5), (4, 5)], "src long, dst long"
+        ),
+        spark.createDataFrame([], "src long, dst long"),
+    ]
+    for edges in cases:
+        local = connected_components(edges)
+        with _star_rounds(spark):
+            star = connected_components(edges)
+            star_rows = set(map(tuple, star.collect()))
+        assert set(map(tuple, local.collect())) == star_rows
+        assert local.schema == star.schema
+
+
+def test_session_stays_serializable(spark):
+    """Sizing the edge set must leave nothing on the session that Spark
+    cannot serialize: a registered pyspark Observation does, and every
+    later closure capturing the session (pyspark.ml transforms) fails."""
+    from pyspark.ml.classification import LogisticRegression
+    from pyspark.ml.feature import VectorAssembler
+
+    connected_components(_path(spark, 10)).collect()
+    train = VectorAssembler(inputCols=["x"], outputCol="features").transform(
+        spark.createDataFrame([(float(i), i % 2) for i in range(20)], "x double, label int")
+    )
+    model = LogisticRegression(maxIter=5).fit(train)
+    assert model.transform(train).count() == 20

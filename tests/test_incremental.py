@@ -67,6 +67,13 @@ def test_resume_skips_completed_stages(spark, corpus, tmp_path):
     c = EntityResolutionPipeline(cfg).run(pages, checkpoint_dir=ckpt)
     rows_c = sorted((r["url"], r["entity_id"]) for r in c.collect())
     assert rows_a == rows_c
+    # scored stage lost, components complete: nothing reads 06_scored on
+    # this resume, so it must be neither recomputed nor rewritten
+    shutil.rmtree(os.path.join(ckpt, "06_scored"))
+    d = EntityResolutionPipeline(cfg).run(pages, checkpoint_dir=ckpt)
+    rows_d = sorted((r["url"], r["entity_id"]) for r in d.collect())
+    assert not os.path.exists(os.path.join(ckpt, "06_scored"))
+    assert rows_a == rows_d
 
 
 def test_manifest_lineage(spark, corpus, tmp_path):
@@ -79,6 +86,59 @@ def test_manifest_lineage(spark, corpus, tmp_path):
     assert m["rows"] == pages.count()
     assert m["rows"] == sum(m["partition_lineage"].values())
     assert m["n_partitions"] >= 1
+
+
+def _jobs_submitted(spark, fn) -> int:
+    sc = spark.sparkContext
+    group = "checkpoint-write-jobs"
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_checkpoint_write_is_one_job(spark, tmp_path):
+    """The manifest comes from the parquet footers: the write is the
+    stage's only Spark job (no re-scan, no schema inference)."""
+    df = spark.range(5000).selectExpr("id", "cast(id % 7 as string) AS k").localCheckpoint()
+    ck = StageCheckpointer(spark, str(tmp_path / "ck_jobs"), "fp")
+    assert _jobs_submitted(spark, lambda: ck.write(df, "s")) == 1
+
+
+def test_manifest_matches_spark_read(spark, tmp_path):
+    """rows, partition_lineage (rows per written part file, keyed by the
+    partition index in its name) and schema equal what Spark reads back."""
+    df = (
+        spark.range(3000)
+        .selectExpr("id", "array(id, id + 1) AS xs", "named_struct('a', id % 5) AS s")
+        .repartition(5)
+    )
+    ck = StageCheckpointer(spark, str(tmp_path / "ck_lineage"), "fp")
+    back = ck.write(df, "s")
+    m = ck.manifest("s")
+    spark_read = spark.read.parquet(os.path.join(ck.root, "s"))
+    by_file = spark_read.groupBy(F.col("_metadata.file_name").alias("f")).count().collect()
+    lineage = {}
+    for r in by_file:
+        part = str(int(r["f"].split("-")[1]))
+        lineage[part] = lineage.get(part, 0) + r["count"]
+    assert m["rows"] == spark_read.count() == 3000
+    assert m["partition_lineage"] == lineage
+    assert m["n_partitions"] == len(lineage)
+    assert m["schema"] == spark_read.schema.jsonValue()
+    assert back.schema == spark_read.schema
+    assert sorted(back.collect()) == sorted(spark_read.collect())
+
+
+def test_manifest_of_empty_stage(spark, tmp_path):
+    ck = StageCheckpointer(spark, str(tmp_path / "ck_empty"), "fp")
+    back = ck.write(spark.range(10).filter("id < 0"), "s")
+    assert ck.manifest("s")["rows"] == 0
+    assert back.count() == 0
+    assert back.schema == spark.read.parquet(os.path.join(ck.root, "s")).schema
 
 
 def test_stale_config_invalidates_checkpoint(spark, corpus, tmp_path):
