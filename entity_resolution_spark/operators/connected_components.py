@@ -1,12 +1,19 @@
 """Stage 8 — transitive clustering: connected components, in one of
 two regimes chosen from the size of the distinct edge set.
 
-* Edge set within the session's broadcast budget
-  (``spark.sql.autoBroadcastJoinThreshold``, the budget Spark uses when
-  it collects a broadcast side to the driver): the edges are collected
-  once and labeled on the driver by a vectorized min-label +
-  pointer-jumping pass (union-find style hooking, see ``_label_local``).
-  One collect replaces the several Spark jobs of every star round.
+* Edge sets whose driver-side labeling fits the session's broadcast
+  budget (``spark.sql.autoBroadcastJoinThreshold``, 64 MiB from
+  ``get_spark``): the edges are collected once as Arrow and labeled on
+  the driver by a vectorized min-label + pointer-jumping pass
+  (union-find style hooking, see ``_label_local``). The check counts
+  the labeling's measured peak driver memory (a fixed number of bytes
+  per edge plus twice any string/binary id payload), not the raw edge
+  bytes: about 0.5M long-id edges at 64 MiB. One collect replaces the
+  several Spark jobs of every star round. The switch is a memory bound,
+  not a speed crossover: on local[4] the driver pass took at least 4x
+  less wall time and 6x less CPU time than the star rounds at every
+  size timed, 10k to 4M long-id edges and 0.1M to 1M string-id edges
+  (``tools/cc_crossover.py``).
 * Larger edge sets (or a budget of -1): the alternating large-star /
   small-star algorithm (Kiveris et al., "Connected Components in
   MapReduce and Beyond", SoCC'14) expressed as pure DataFrame
@@ -26,16 +33,22 @@ partitioning, and identical in both regimes.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import BinaryType, StringType, StructField, StructType
 
 from entity_resolution_spark.util import broadcast_budget
 
-# bytes per id for the budget when ids are not strings/binary: the
-# widest fixed-width orderable type (long, double, timestamp)
-_FIXED_ID_BYTES = 8
+# driver bytes the local labeling holds at its peak per edge, besides
+# the id payload of string/binary ids: Arrow columns, codes, labels and
+# one pass's index arrays. Peak RSS of _label_local measured 103-116 B
+# per edge for long ids at 0.2M-1M random edges.
+_LOCAL_BYTES_PER_EDGE = 128
+# string/binary payload held at that peak: the Arrow columns plus the
+# distinct ids measured about 1.3x the summed byte length
+_PAYLOAD_COPIES = 2
 # name of the edge-set size metrics observed on the distinct-edge checkpoint
 _SIZE_METRIC = "connected_components_edge_set"
 
@@ -84,37 +97,44 @@ def _edge_checksum(edges: DataFrame) -> tuple[int, int]:
 
 
 def _label_local(edges: DataFrame) -> DataFrame:
-    """Collect the (distinct, loop-free) edge set and label it on the
-    driver: the same (id, component = min id) rows the star rounds give.
+    """Collect the (distinct, loop-free) edge set as Arrow and label it
+    on the driver: the same (id, component = min id) rows the star
+    rounds give.
 
-    Ids become ``pd.factorize(sort=True)`` codes, so the minimum code
-    is the minimum id (UTF-8 byte order equals code-point order for
-    strings). Each pass hooks both endpoints of every edge and their
+    Ids become codes into their sorted distinct values, so the minimum
+    code is the minimum id (Arrow and Spark both order strings by UTF-8
+    bytes). Each pass hooks both endpoints of every edge and their
     current labels onto the smaller endpoint label, then pointer-jumps
     labels to a fixed point. Labels only decrease and never exceed the
     node's own code, so at the fixed point every edge joins two nodes
-    of equal label and that label is the component's minimum code.
+    of equal label and that label is the component's minimum code. Ids
+    stay in Arrow buffers (no Python object per id), so the driver's
+    peak is a fixed number of bytes per edge plus the id payload: what
+    ``connected_components`` checks against the budget.
     """
-    id_type = edges.schema["src"].dataType
-    pdf = edges.toPandas()
-    n_edges = len(pdf)
-    codes, ids = pd.factorize(
-        np.concatenate([pdf["src"].to_numpy(), pdf["dst"].to_numpy()]), sort=True
-    )
-    src, dst = codes[:n_edges], codes[n_edges:]
-    label = np.arange(len(ids))
+    table = edges.toArrow()
+    id_type = table.schema.field("src").type
+    ids = pa.chunked_array(table["src"].chunks + table["dst"].chunks, type=id_type)
+    uniq = pc.unique(ids)
+    uniq = uniq.take(pc.sort_indices(uniq))
+    codes = pc.index_in(ids, value_set=uniq).to_numpy()
+    src, dst = codes[: table.num_rows], codes[table.num_rows :]
+    label = np.arange(len(uniq), dtype=codes.dtype)
     while True:
-        lo = np.minimum(label[src], label[dst])
+        at_src, at_dst = label[src], label[dst]
+        lo = np.minimum(at_src, at_dst)
         new = label.copy()
-        np.minimum.at(new, np.concatenate([src, dst, label[src], label[dst]]), np.tile(lo, 4))
+        for idx in (src, dst, at_src, at_dst):
+            np.minimum.at(new, idx, lo)
         while not np.array_equal(jumped := new[new], new):
             new = jumped
         if np.array_equal(new, label):
             break
         label = new
-    schema = StructType([StructField("id", id_type), StructField("component", id_type)])
+    id_field = edges.schema["src"].dataType
+    schema = StructType([StructField("id", id_field), StructField("component", id_field)])
     return edges.sparkSession.createDataFrame(
-        pd.DataFrame({"id": ids, "component": ids[label]}), schema
+        pa.table({"id": uniq, "component": uniq.take(label)}), schema
     )
 
 
@@ -124,9 +144,10 @@ def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
     Self-loops and duplicate edges are dropped and the distinct edge
     set is localCheckpoint()ed once; its row count (and, for string or
     binary ids, its summed byte length) is observed on that same job.
-    If the edge set fits the session's
-    ``spark.sql.autoBroadcastJoinThreshold`` it is labeled in one pass
-    on the driver (``_label_local``). Otherwise large-star/small-star
+    If the driver memory that labeling it takes (``_LOCAL_BYTES_PER_EDGE``
+    per edge plus ``_PAYLOAD_COPIES`` times the id payload) fits the
+    session's ``spark.sql.autoBroadcastJoinThreshold``, it is labeled
+    in one pass on the driver (``_label_local``). Otherwise large-star/small-star
     rounds iterate to a fixed point (edge-set checksum stable),
     localCheckpoint()ing each round to truncate lineage, and raise
     RuntimeError if none is reached in ``max_iter`` rounds: the edge
@@ -155,11 +176,9 @@ def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
     # ObservationManager that Spark cannot serialize, and every later
     # closure capturing the session (pyspark.ml model transforms) fails.
     size = observed._jdf.queryExecution().observedMetrics().get(_SIZE_METRIC).get()
-    if size.length() > 1:
-        n_bytes = size.get(1) or 0  # a sum over no rows is null
-    else:
-        n_bytes = size.getLong(0) * 2 * _FIXED_ID_BYTES
-    if n_bytes <= broadcast_budget(cur.sparkSession):
+    payload = (size.get(1) or 0) if size.length() > 1 else 0  # a sum over no rows is null
+    driver_bytes = size.getLong(0) * _LOCAL_BYTES_PER_EDGE + payload * _PAYLOAD_COPIES
+    if driver_bytes <= broadcast_budget(cur.sparkSession):
         return _label_local(cur)
     prev_sig: tuple[int, int] | None = None
     for _ in range(max_iter):

@@ -93,7 +93,10 @@ def get_spark(
         # pair stream twice per attach. 64 MB is safe at executor
         # memory >= 4g and lets AQE pick broadcast at runtime too. It is
         # the one broadcast budget: scoring.broadcastable reads it from
-        # the session to pin the ER feature attaches.
+        # the session to pin the ER feature attaches, and
+        # connected_components labels an edge set on the driver (in
+        # this Python process) when its estimated driver memory fits
+        # it — raising it also moves larger graphs onto the driver.
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
         .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "64m")
         # Arrow for every pandas UDF / toPandas boundary.

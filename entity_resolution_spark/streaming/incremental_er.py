@@ -211,8 +211,13 @@ def start_incremental_er(
         # bucket=N dirs — a mixed, unreadable layout. Static overwrite
         # shares the parquet sink's known non-atomicity (module
         # docstring: Iceberg merge_upsert is the durable variant).
+        # repartition by bucket first: partitionBy writes one file per
+        # (input partition x bucket), so a wide merged frame would
+        # rewrite each touched bucket as that many small files, and
+        # the next batch would read them all back.
         (
-            merged.write.partitionBy(BUCKET_COL)
+            merged.repartition(BUCKET_COL)
+            .write.partitionBy(BUCKET_COL)
             .option("partitionOverwriteMode", "static" if migrating else "dynamic")
             .mode("overwrite")
             .parquet(table_path)

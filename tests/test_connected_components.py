@@ -7,6 +7,7 @@ import random
 
 import pytest
 
+from entity_resolution_spark.operators import connected_components as cc
 from entity_resolution_spark.operators.connected_components import connected_components
 
 
@@ -94,15 +95,19 @@ def test_string_ids(spark):
 
 
 @contextlib.contextmanager
-def _star_rounds(spark):
-    """Budget -1: every edge set takes the large-star/small-star rounds."""
+def _budget(spark, value):
     key = "spark.sql.autoBroadcastJoinThreshold"
     prev = spark.conf.get(key)
-    spark.conf.set(key, "-1")
+    spark.conf.set(key, str(value))
     try:
         yield
     finally:
         spark.conf.set(key, prev)
+
+
+def _star_rounds(spark):
+    """Budget -1: every edge set takes the large-star/small-star rounds."""
+    return _budget(spark, -1)
 
 
 def _path(spark, n=200):
@@ -114,6 +119,24 @@ def test_unconverged_raises(spark):
     that edge set would split the path into ~199 "components"."""
     with _star_rounds(spark), pytest.raises(RuntimeError, match=r"max_iter=1 .*\d+ edges"):
         connected_components(_path(spark), max_iter=1)
+
+
+def test_budget_boundary(spark):
+    """The driver pass is taken exactly when its estimated driver memory
+    (bytes per edge plus the string payload) fits the budget; one byte
+    less takes the star rounds, which cannot finish a 201-node path in
+    one round."""
+    long_path = _path(spark)
+    str_path = long_path.selectExpr("concat('https://a/', src) src", "concat('https://a/', dst) dst")
+    payload = str_path.selectExpr("sum(octet_length(src) + octet_length(dst))").first()[0]
+    for edges, est in [
+        (long_path, 200 * cc._LOCAL_BYTES_PER_EDGE),
+        (str_path, 200 * cc._LOCAL_BYTES_PER_EDGE + payload * cc._PAYLOAD_COPIES),
+    ]:
+        with _budget(spark, est):
+            assert len(connected_components(edges, max_iter=1).collect()) == 201
+        with _budget(spark, est - 1), pytest.raises(RuntimeError, match="max_iter=1"):
+            connected_components(edges, max_iter=1)
 
 
 def test_local_and_star_paths_agree(spark):

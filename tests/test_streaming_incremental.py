@@ -122,6 +122,10 @@ def test_incremental_er_rewrites_only_touched_partitions(spark, corpus, tmp_path
     assert untouched, "batch touched every bucket — test corpus too coupled"
     for d in untouched:
         assert after[d] == before[d], f"files changed in untouched {d}"
+    # one file per bucket, however wide the merged batch was: the next
+    # batch reads each touched bucket back whole
+    for snapshot in (before, after):
+        assert {d: len(files) for d, files in snapshot.items() if len(files) != 1} == {}
     # and the merge is still correct: all urls present, b1 ids stable
     ids = {r["url"]: r["entity_id"] for r in spark.read.parquet(table).collect()}
     assert set(ids) == {r["url"] for r in b1.select("url").collect()} | {
