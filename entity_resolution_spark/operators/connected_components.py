@@ -144,10 +144,11 @@ def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
     Self-loops and duplicate edges are dropped and the distinct edge
     set is localCheckpoint()ed once; its row count (and, for string or
     binary ids, its summed byte length) is observed on that same job.
-    If the driver memory that labeling it takes (``_LOCAL_BYTES_PER_EDGE``
-    per edge plus ``_PAYLOAD_COPIES`` times the id payload) fits the
-    session's ``spark.sql.autoBroadcastJoinThreshold``, it is labeled
-    in one pass on the driver (``_label_local``). Otherwise large-star/small-star
+    If the driver memory that labeling it takes
+    (``_LOCAL_BYTES_PER_EDGE`` per edge plus ``_PAYLOAD_COPIES`` times
+    the id payload) fits the session's
+    ``spark.sql.autoBroadcastJoinThreshold``, it is labeled in one pass
+    on the driver (``_label_local``). Otherwise large-star/small-star
     rounds iterate to a fixed point (edge-set checksum stable),
     localCheckpoint()ing each round to truncate lineage, and raise
     RuntimeError if none is reached in ``max_iter`` rounds: the edge

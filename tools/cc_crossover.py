@@ -25,26 +25,10 @@ sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 
 from entity_resolution_spark import get_spark  # noqa: E402
 from entity_resolution_spark.operators import connected_components as cc  # noqa: E402
+from perfbench.run import tree_cpu_s  # noqa: E402
 
 BUDGET = "spark.sql.autoBroadcastJoinThreshold"
 DEFAULT_BUDGET = 64 << 20
-
-
-def tree_cpu_s() -> float:
-    """User + system CPU seconds of this process and all below it."""
-    procs = {}
-    for name in filter(str.isdigit, os.listdir("/proc")):
-        try:
-            with open(f"/proc/{name}/stat") as f:
-                fields = f.read().rsplit(")", 1)[1].split()
-        except OSError:
-            continue
-        procs[int(name)] = (int(fields[1]), sum(int(x) for x in fields[11:15]))
-    tree, frontier = set(), {os.getpid()}
-    while frontier:
-        tree |= frontier
-        frontier = {p for p, (pp, _) in procs.items() if pp in frontier} - tree
-    return sum(procs[p][1] for p in tree if p in procs) / os.sysconf("SC_CLK_TCK")
 
 
 def edge_set(spark, kind: str, n: int):
