@@ -407,9 +407,10 @@ def _materialize_scale_input(sf_dir: str, mult: int) -> int:
 
 
 def _score_once(n: int) -> None:
-    """Subprocess entry: timed two-phase scoring of the materialized
-    scaling corpus at local[n]. A small warm run first JITs the plan
-    and spawns the python workers; the timed run is steady-state."""
+    """Subprocess entry: timed scoring (phase 1, then phase 2) of the
+    materialized scaling corpus at local[n]. A small warm run first
+    JITs the plan and spawns the python workers; the timed run is
+    steady-state."""
     from entity_resolution_spark.plans.pipeline import EntityResolutionPipeline
 
     spark = _fresh_spark(n)
@@ -420,11 +421,16 @@ def _score_once(n: int) -> None:
     def run(p):
         from pyspark.sql import functions as F
 
-        scored = pipe.score(p, feats)
-        return scored.agg(
+        from entity_resolution_spark.operators.scoring import deterministic_match_pass
+
+        det, rem = deterministic_match_pass(p, feats)
+        agg = pipe.score(rem, feats).agg(
             F.count("*").alias("n"),
             F.sum((F.col("score") >= pipe.config.scoring.threshold).cast("long")).alias("m"),
         ).first()
+        # every deterministic edge is a scored candidate and a match
+        n_det = det.count()
+        return {"n": agg["n"] + n_det, "m": (agg["m"] or 0) + n_det}
 
     # warm on a FILE SUBSET of the same parquet: identical plan shape
     # to the timed run (a .sample() would inject a Sample operator and

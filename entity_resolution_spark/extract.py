@@ -4,9 +4,8 @@ Per-row invariant (BASELINE.json input_hint): the extracted text must be
 byte-identical to the ``text`` column for every ``url``. The extractor is
 a pure, versioned function; tests/test_extract.py holds the golden check.
 
-Primary path is JVM-native regex (whole-stage codegen; no Python at
-all). A pandas-UDF variant exists for html dialects a regex can't
-express — same contract, Arrow-batched (never per-row Python).
+Extraction is JVM-native regex (whole-stage codegen; no Python at
+all).
 
 Reference parity: replaces the reference's per-row cleaning UDF entry
 points (reference mlir.py:664-697) with declarative column expressions.
@@ -14,10 +13,8 @@ points (reference mlir.py:664-697) with declarative column expressions.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 EXTRACTOR_VERSION = 1
 
@@ -34,25 +31,8 @@ def html_to_title(html: Column) -> Column:
     return F.regexp_extract(F.decode(html, "UTF-8"), _TITLE_RE, 1)
 
 
-@F.pandas_udf(T.StringType())
-def html_to_text_pandas(html: pd.Series) -> pd.Series:
-    """Arrow-batched fallback extractor (same byte-identity contract)."""
-    def one(b: bytes | None) -> str:
-        if b is None:
-            return ""
-        s = b.decode("utf-8", errors="replace")
-        i = s.find("<body>")
-        j = s.rfind("</body>")
-        if i < 0 or j < 0:
-            return ""
-        return s[i + len("<body>") : j]
-
-    return html.map(one)
-
-
-def extract(pages: DataFrame, use_pandas: bool = False) -> DataFrame:
+def extract(pages: DataFrame) -> DataFrame:
     """pages(url, warc_ts, html, text, lang) -> + extracted_text, title."""
-    text_col = html_to_text_pandas(F.col("html")) if use_pandas else html_to_text(F.col("html"))
-    return pages.withColumn("extracted_text", text_col).withColumn(
+    return pages.withColumn("extracted_text", html_to_text(F.col("html"))).withColumn(
         "title", html_to_title(F.col("html"))
     )

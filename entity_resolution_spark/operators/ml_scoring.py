@@ -43,7 +43,8 @@ from pyspark.ml.functions import vector_to_array
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# the engine's pair-similarity columns (score_pairs_two_phase output)
+# the engine's pair-similarity columns (score_pairs_two_phase output;
+# exact_dup is False there, exact pairs leave as phase-1 edges)
 DEFAULT_FEATURE_COLS = ["jaccard_shingles", "jw_title", "lev_ratio_prefix", "exact_dup_i"]
 DEFAULT_THRESHOLD = 0.75  # Orchestrate_Demo.py:378
 

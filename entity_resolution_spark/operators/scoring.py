@@ -110,105 +110,62 @@ def broadcastable(features: DataFrame, cols: list[str]) -> bool:
 def score_pairs_two_phase(
     pairs: DataFrame, features: DataFrame, cfg: ScoringConfig = ScoringConfig()
 ) -> DataFrame:
-    """pairs(id_1, id_2) x features -> scored pairs, in two phases.
+    """remaining(id_1, id_2, jaccard_est) from deterministic_match_pass
+    x features -> scored pairs: the estimate gate, then phase 2.
 
-    Phase 1 attaches only (fingerprint, minhash_sig) — ~0.5 KB/side vs
-    multi-KB shingle arrays — and gates on the MinHash Jaccard
-    ESTIMATE. Phase 2 re-joins the full payload (shingles, title,
-    prefix) for the small survivor set and computes the exact score
-    with the single-phase formula. At web scale this cuts the
-    dominant pair-join shuffle by the candidate/survivor ratio
-    (typically 10-100x) and keeps the Arrow-batched UDFs off the
-    non-survivor stream entirely (a `when()` guard does NOT stop Spark
-    evaluating a Python UDF on every row — only a filter does).
+    Pairs whose MinHash Jaccard estimate is under gate_est get score =
+    est * w_jaccard, below any usable threshold by construction.
+    Phase 2 attaches the full payload (shingles, title, prefix) to the
+    survivors only and computes the exact score with the single-phase
+    formula, so the Arrow-batched UDFs never see a non-survivor (a
+    `when()` guard does NOT stop Spark evaluating a Python UDF on
+    every row — only a filter does). Scores equal the single-phase
+    reference scorer's (kept in tests/test_pipeline_e2e.py) for every
+    survivor.
 
-    Scores equal the single-phase reference scorer's (kept in
-    tests/test_pipeline_e2e.py) for every pair passing the estimate
-    gate; sub-gate pairs get score = est * w_jaccard, which is
-    below any usable threshold by construction (est < gate_est).
+    `exact_dup` is False on every row: exact-fingerprint pairs left as
+    deterministic edges in phase 1. The column stays because the
+    06_scored stage schema and the pair classifier's exact_dup_i
+    feature read it.
     """
-    from entity_resolution_spark.functions.similarity import minhash_jaccard_estimate
     from entity_resolution_spark.operators.pairs import attach_features
 
-    # AQE coalesces shuffles toward ~64MB partitions — right for IO,
-    # wrong for the CPU-bound estimate/similarity stages (a 16M-pair
-    # stream lands on a handful of cores). Fan compute out explicitly
-    # and UNCONDITIONALLY: AQE's runtime coalescing cannot be observed
-    # at plan time, and probing .rdd.getNumPartitions() forces RDD
-    # conversion of the analyzed plan (round-2 advisory). The streams
-    # being spread are narrow pair ids (~16 B/row), so the explicit
-    # shuffle is cheap, and user repartition() is exempt from AQE
-    # coalescing — exactly the guarantee the CPU stages need.
     par = pairs.sparkSession.sparkContext.defaultParallelism
-
-    # Phase-1 and phase-2 attach different projections (narrow
-    # fingerprint+signature vs wide shingles+title+prefix), so the
-    # broadcast choice is made PER ATTACH. The phase-2 size is a
-    # conservative upper bound (full feature table, though only the
-    # survivor slice actually joins) — it errs toward the shuffle join
-    # at scale, never toward an executor OOM.
-    bcast_p1 = broadcastable(features, ["fingerprint", "minhash_sig"])
-    bcast_p2 = broadcastable(features, ["shingles", "norm_title", "text_prefix"])
-    p1 = (
-        attach_features(
-            pairs.repartition(par * 2, "id_1", "id_2"),
-            features,
-            cols=["fingerprint", "minhash_sig"],
-            broadcast=bcast_p1,
-        )
-        .select(
-            "id_1",
-            "id_2",
-            F.col("fingerprint_1").eqNullSafe(F.col("fingerprint_2")).alias("exact_dup"),
-            minhash_jaccard_estimate(
-                F.col("minhash_sig_1"), F.col("minhash_sig_2")
-            ).alias("jaccard_est"),
-        )
-    )
-    # Both branches below read p1 — materialize it ONCE, eagerly: in a
-    # single downstream action the cheap/full union branches would
-    # otherwise race to recompute the pair join, and AQE would plan the
-    # survivor joins without size stats (observed 5x slowdown).
-    # localCheckpoint (not persist): blocks are freed automatically by
-    # the ContextCleaner once the result goes out of scope, so repeated
-    # calls don't accumulate session-lifetime cache (round-1 advisory).
-    p1 = p1.localCheckpoint(eager=True)
-    needs_full = (~F.col("exact_dup")) & (F.col("jaccard_est") >= cfg.gate_est)
-
-    cheap = p1.filter(~needs_full).select(
+    needs_full = F.col("jaccard_est") >= cfg.gate_est
+    cheap = pairs.filter(~needs_full).select(
         "id_1",
         "id_2",
-        "exact_dup",
+        F.lit(False).alias("exact_dup"),
         "jaccard_est",
-        F.when(F.col("exact_dup"), F.lit(1.0)).otherwise(F.col("jaccard_est")).alias(
-            "jaccard_shingles"
-        ),
+        F.col("jaccard_est").alias("jaccard_shingles"),
         F.lit(0.0).alias("jw_title"),
         F.lit(0.0).alias("lev_ratio_prefix"),
-        F.when(F.col("exact_dup"), F.lit(1.0))
-        .otherwise(F.col("jaccard_est") * cfg.w_jaccard)
-        .alias("score"),
+        (F.col("jaccard_est") * cfg.w_jaccard).alias("score"),
     )
 
-    surv = p1.filter(needs_full).select(
-        "id_1", "id_2", "exact_dup", "jaccard_est"
+    surv = pairs.filter(needs_full).select(
+        "id_1", "id_2", "jaccard_est"
     ).repartition(par, "id_1", "id_2")
     # Only survivors' features are needed in phase 2 — semi-join the
     # feature table down first. At web scale the full feature table is
-    # never broadcastable; the survivor slice usually is.
+    # never broadcastable; the survivor slice usually is. The size
+    # check is a conservative upper bound (full feature table, though
+    # only the survivor slice joins): it errs toward the shuffle join
+    # at scale, never toward an executor OOM.
+    bcast = broadcastable(features, ["shingles", "norm_title", "text_prefix"])
     surv_ids = (
         surv.select(F.col("id_1").alias("url_id"))
         .unionByName(surv.select(F.col("id_2").alias("url_id")))
         .dropDuplicates(["url_id"])
     )
-    if bcast_p2:
+    if bcast:
         surv_ids = F.broadcast(surv_ids)
     feats_sub = features.join(surv_ids, "url_id", "left_semi")
     wide = attach_features(
         surv,
         feats_sub,
         cols=["shingles", "norm_title", "text_prefix"],
-        broadcast=bcast_p2,
+        broadcast=bcast,
     )
     jac = token_jaccard(F.col("shingles_1"), F.col("shingles_2")).alias("jaccard_shingles")
     sim_cond = F.col("jaccard_shingles") >= cfg.cheap_gate
@@ -216,7 +173,6 @@ def score_pairs_two_phase(
         wide.select(
             "id_1",
             "id_2",
-            "exact_dup",
             "jaccard_est",
             jac,
             F.col("norm_title_1"),
@@ -246,7 +202,7 @@ def score_pairs_two_phase(
             + F.col("lev_ratio_prefix") * cfg.w_prefix_lev,
         )
         .select(
-            "id_1", "id_2", "exact_dup", "jaccard_est",
+            "id_1", "id_2", F.lit(False).alias("exact_dup"), "jaccard_est",
             "jaccard_shingles", "jw_title", "lev_ratio_prefix", "score",
         )
     )
@@ -254,55 +210,74 @@ def score_pairs_two_phase(
 
 
 def deterministic_match_pass(
-    pairs: DataFrame, features: DataFrame, broadcast: bool = True,
-    materialize: bool = True,
+    pairs: DataFrame, features: DataFrame
 ) -> tuple[DataFrame, DataFrame]:
-    """Reference stage-6 structure (Orchestrate_Demo.py:305-360;
+    """Scoring's phase 1: one pass over the candidate pairs.
+
+    Reference stage-6 structure (Orchestrate_Demo.py:305-360;
     deterministicAlgorithm mlir.py:1324-1554): a cheap deterministic
     rule pass emits its matches as edges FIRST, and those pairs are
     NOT-EXISTS-subtracted from the candidate stream before the
-    expensive probabilistic scorer ever sees them.
+    expensive probabilistic scorer ever sees them. Here the rule is
+    exact content-fingerprint equality (the web analog of the
+    reference's shared-device-id rule).
 
-    Here the deterministic rule is exact content-fingerprint equality
-    (the web analog of the reference's shared-device-id rule). Only the
-    8-byte fingerprint rides this pair join — far cheaper than the
-    phase-1 attach — and every subtracted pair skips the MinHash
-    estimate, the semi-join slice, and the Arrow UDFs entirely.
+    Only (fingerprint, minhash_sig) — ~0.5 KB/side vs multi-KB shingle
+    arrays — is attached to every candidate, once, for both cheap
+    filters: the exact-match rule and the MinHash Jaccard estimate
+    that score_pairs_two_phase gates on, so the wide payload rides
+    only the (typically 10-100x smaller) survivor stream.
 
-    Returns (det_edges(src, dst), remaining_pairs(id_1, id_2)).
-    Components are unchanged vs scoring those pairs (an exact pair
-    always scored 1.0 >= threshold); tested by equivalence in
-    tests/test_pipeline_e2e.py.
+    Returns (det_edges(src, dst), remaining(id_1, id_2, jaccard_est)),
+    an exact partition of the input pairs. Components are unchanged vs
+    scoring the exact pairs (the single-phase formula scores them 1.0
+    >= threshold); tested in tests/test_pipeline_e2e.py.
     """
+    from entity_resolution_spark.functions.similarity import minhash_jaccard_estimate
     from entity_resolution_spark.operators.pairs import attach_features
 
-    tagged = attach_features(pairs, features, cols=["fingerprint"], broadcast=broadcast)
-    if materialize:
-        # both returned frames filter this attach; without
-        # materialization the pair join runs TWICE in the consumer's
-        # final plan (ReusedExchange covers the shuffle, not the
-        # broadcast-join map work — measured ~2.8s of a 13s sf0.1 core
-        # run). Eager by necessity: under AQE even a LAZY
-        # localCheckpoint materializes the exchanges at RDD-conversion
-        # time (measured: identical job count), so deferring buys
-        # nothing — instead callers that won't consume the result must
-        # not call this at all (pipeline.run skips the pass when the
-        # components checkpoint is already complete). The frame is
-        # narrow (ids + two 8-byte fingerprints); at 10^10+-pair scale
-        # where even that is too much to pin, pass materialize=False
-        # and pay the recompute.
-        tagged = tagged.localCheckpoint(eager=True)
-    # eqNullSafe keeps the split an exact PARTITION: with a plain `==`,
-    # a pair with any null fingerprint is NULL under both `same` and
-    # `~same` and silently vanishes from det_edges AND remaining
-    # (round-2 advisory). Null-null pairs (both pages extracted to
-    # null text) are identical sentinel content -> deterministic match,
-    # matching scoring's eqNullSafe exact_dup (score 1.0).
-    same = F.col("fingerprint_1").eqNullSafe(F.col("fingerprint_2"))
-    det_edges = tagged.filter(same).select(
+    # AQE coalesces shuffles toward ~64MB partitions — right for IO,
+    # wrong for the CPU-bound estimate/similarity stages (a 16M-pair
+    # stream lands on a handful of cores). Fan out UNCONDITIONALLY:
+    # AQE's runtime coalescing cannot be observed at plan time, the
+    # narrow pair ids (~16 B/row) shuffle cheaply, and a user
+    # repartition() is exempt from AQE coalescing.
+    par = pairs.sparkSession.sparkContext.defaultParallelism
+    cols = ["fingerprint", "minhash_sig"]
+    tagged = attach_features(
+        pairs.repartition(par * 2, "id_1", "id_2"),
+        features,
+        cols=cols,
+        # sized per run (round-4 verdict: a fixed broadcast OOMs at scale)
+        broadcast=broadcastable(features, cols),
+    ).select(
+        "id_1",
+        "id_2",
+        # eqNullSafe keeps the split an exact PARTITION: with a plain
+        # `==`, a pair with any null fingerprint is NULL under both
+        # `exact_dup` and `~exact_dup` and silently vanishes from
+        # det_edges AND remaining (round-2 advisory). Null-null pairs
+        # (both pages extracted to null text) are identical sentinel
+        # content -> deterministic match.
+        F.col("fingerprint_1").eqNullSafe(F.col("fingerprint_2")).alias("exact_dup"),
+        minhash_jaccard_estimate(F.col("minhash_sig_1"), F.col("minhash_sig_2")).alias(
+            "jaccard_est"
+        ),
+    )
+    # Both returned frames filter this attach, and scoring reads
+    # `remaining` in two union branches — materialize it ONCE: else the
+    # pair join's map work reruns per consumer, and AQE plans the
+    # survivor joins without size stats (observed 5x slowdown). Eager,
+    # because under AQE even a lazy localCheckpoint runs the exchanges
+    # at RDD conversion; callers that won't consume the result must not
+    # call this (pipeline.scored skips it on a full resume).
+    # localCheckpoint, not persist: the ContextCleaner frees the blocks
+    # once the result goes out of scope (round-1 advisory).
+    tagged = tagged.localCheckpoint(eager=True)
+    det_edges = tagged.filter(F.col("exact_dup")).select(
         F.col("id_1").alias("src"), F.col("id_2").alias("dst")
     )
-    remaining = tagged.filter(~same).select("id_1", "id_2")
+    remaining = tagged.filter(~F.col("exact_dup")).select("id_1", "id_2", "jaccard_est")
     return det_edges, remaining
 
 

@@ -33,7 +33,6 @@ from entity_resolution_spark.operators.connected_components import connected_com
 from entity_resolution_spark.operators.pairs import candidate_pairs
 from entity_resolution_spark.operators.scoring import (
     ScoringConfig,
-    broadcastable,
     deterministic_match_pass,
     edges_from_scores,
     score_pairs_two_phase,
@@ -115,6 +114,7 @@ class EntityResolutionPipeline:
         return capped, stats
 
     def score(self, pairs: DataFrame, feats: DataFrame) -> DataFrame:
+        """Remaining pairs of deterministic_match_pass -> scored pairs."""
         return score_pairs_two_phase(pairs, feats, self.config.scoring)
 
     # -- stage groups (run() and bench.py share them) ----------------------
@@ -156,25 +156,18 @@ class EntityResolutionPipeline:
     def scored(
         self, feats: DataFrame, pairs: DataFrame, checkpoint_dir: str | None = None
     ) -> tuple[DataFrame | None, DataFrame | None]:
-        """(feats, pairs) -> (det_edges, scored): deterministic
-        exact-match pre-pass -> two-phase scoring of the remaining
+        """(feats, pairs) -> (det_edges, scored): phase 1 (the
+        deterministic exact-match rule and the MinHash estimate, one
+        attach) -> the estimate gate and phase 2 on the remaining
         pairs, resuming stage 06 from checkpoint_dir. (None, None) when
         the components checkpoint is complete: components are then read
-        from parquet, so neither output has a consumer (the pre-pass
-        eagerly materializes its attach, and a missing 06_scored would
+        from parquet, so neither output has a consumer (phase 1 eagerly
+        materializes its attach, and a missing 06_scored would
         otherwise be rescored and rewritten on every resume)."""
         ckpt = self._checkpointer(feats.sparkSession, checkpoint_dir)
         if ckpt is not None and ckpt.is_complete("08_components"):
             return None, None
-        det_edges, pairs = deterministic_match_pass(
-            pairs,
-            feats,
-            # sized per run (round-4 verdict: a fixed True default
-            # OOMs at scale); only the 8-byte fingerprint rides this
-            # attach, so it stays broadcastable far longer than the
-            # wide phase-2 payload.
-            broadcast=broadcastable(feats, ["fingerprint"]),
-        )
+        det_edges, pairs = deterministic_match_pass(pairs, feats)
         return det_edges, _staged(ckpt, "06_scored", lambda: self.score(pairs, feats))
 
     # -- full run ---------------------------------------------------------

@@ -13,12 +13,6 @@ def test_extract_byte_identical(corpus):
     assert mismatched == 0
 
 
-def test_extract_pandas_variant_byte_identical(corpus):
-    pages, _, _ = corpus
-    ext = extract(pages, use_pandas=True)
-    assert ext.filter(F.col("extracted_text") != F.col("text")).count() == 0
-
-
 def test_title_extracted(corpus):
     pages, _, _ = corpus
     ext = extract(pages)

@@ -13,6 +13,7 @@ from entity_resolution_spark.operators.ml_scoring import (
     train_pair_classifier,
 )
 from entity_resolution_spark.operators.pairs import candidate_pairs
+from entity_resolution_spark.operators.scoring import deterministic_match_pass
 from entity_resolution_spark.plans.pipeline import EntityResolutionPipeline
 
 
@@ -22,7 +23,10 @@ def _labeled_scored(spark, corpus):
     feats = pipe.featurize(pages)
     blocks, _ = pipe.block(feats)
     pairs = candidate_pairs(blocks)
-    scored = pipe.score(pairs, feats)
+    # exact-fingerprint pairs leave as deterministic edges; the
+    # classifier learns on the pairs scoring sees
+    _, remaining = deterministic_match_pass(pairs, feats)
+    scored = pipe.score(remaining, feats)
     ids = feats.select("url", "url_id")
     lab = (
         labels.join(

@@ -121,14 +121,16 @@ def score_pairs(pairs_feat, cfg):
 
 
 def test_two_phase_equivalent_to_single_phase(spark, corpus):
-    """score_pairs_two_phase must produce the same edge set as the
-    single-phase score_pairs at the pipeline threshold (round-1
+    """Phase 1 (deterministic_match_pass) plus score_pairs_two_phase
+    must produce the same edge set as the single-phase score_pairs at
+    the pipeline threshold (round-1
     advisory: the old hard-coded estimate gate silently dropped
     low-Jaccard/high-title matches; the gate is now derived from the
     minimum matchable Jaccard minus a 3-sigma MinHash margin)."""
     from entity_resolution_spark.operators.pairs import attach_features
     from entity_resolution_spark.operators.scoring import (
         ScoringConfig,
+        deterministic_match_pass,
         edges_from_scores,
         score_pairs_two_phase,
     )
@@ -142,9 +144,10 @@ def test_two_phase_equivalent_to_single_phase(spark, corpus):
 
     wide = attach_features(pairs, feats, cols=PAIR_FEATURE_COLS, broadcast=True)
     one = edges_from_scores(score_pairs(wide, cfg), cfg.threshold)
-    two = edges_from_scores(score_pairs_two_phase(pairs, feats, cfg), cfg.threshold)
+    det, remaining = deterministic_match_pass(pairs, feats)
+    two = edges_from_scores(score_pairs_two_phase(remaining, feats, cfg), cfg.threshold)
     e1 = {(r["src"], r["dst"]) for r in one.collect()}
-    e2 = {(r["src"], r["dst"]) for r in two.collect()}
+    e2 = {(r["src"], r["dst"]) for r in two.unionByName(det).collect()}
     assert e1 == e2
 
 
@@ -164,12 +167,14 @@ def test_deterministic_prepass_equivalent_and_subtracts(spark, corpus):
     """The deterministic exact-match pre-pass (reference stage-6 shape,
     Orchestrate_Demo.py:360) must not change the final entities, and
     must shrink the candidate stream entering probabilistic scoring.
-    Without the pass, exact dups score 1.0 inside two-phase scoring."""
+    Without the pass, the single-phase reference scorer scores exact
+    dups 1.0 over all candidates. The pass also carries the MinHash
+    estimate the scorer gates on."""
     from entity_resolution_spark.operators.connected_components import connected_components
+    from entity_resolution_spark.operators.pairs import attach_features
     from entity_resolution_spark.operators.scoring import (
         deterministic_match_pass,
         edges_from_scores,
-        score_pairs_two_phase,
     )
     from entity_resolution_spark.operators.stamping import stamp_entities
 
@@ -178,7 +183,8 @@ def test_deterministic_prepass_equivalent_and_subtracts(spark, corpus):
     on = pipe.run(pages)
     feats, pairs = pipe.candidates(pages)
     cfg = pipe.config.scoring
-    edges = edges_from_scores(score_pairs_two_phase(pairs, feats, cfg), cfg.threshold)
+    wide = attach_features(pairs, feats, cols=PAIR_FEATURE_COLS, broadcast=True)
+    edges = edges_from_scores(score_pairs(wide, cfg), cfg.threshold)
     off = stamp_entities(feats.select("url", "url_id", "warc_ts"), connected_components(edges))
     a = {r["url"]: r["entity_id"] for r in on.collect()}
     b = {r["url"]: r["entity_id"] for r in off.collect()}
@@ -188,6 +194,13 @@ def test_deterministic_prepass_equivalent_and_subtracts(spark, corpus):
     n_pairs, n_det, n_rem = pairs.count(), det_edges.count(), remaining.count()
     assert n_det > 0  # the corpus plants exact dups
     assert n_rem == n_pairs - n_det  # NOT-EXISTS subtraction is exact
+
+    # jaccard_est is the fraction of agreeing signature components
+    sigs = {r["url_id"]: r["minhash_sig"] for r in feats.select("url_id", "minhash_sig").collect()}
+    for r in remaining.collect():
+        s1, s2 = sigs[r["id_1"]], sigs[r["id_2"]]
+        want = sum(x == y for x, y in zip(s1, s2)) / max(len(s1), 1)
+        assert r["jaccard_est"] == pytest.approx(want, abs=1e-12), (r, want)
 
 
 def test_entity_id_stability_across_reruns_and_row_order(spark, corpus):
@@ -224,8 +237,9 @@ def test_repeat_run_reuses_generated_code(spark, corpus):
 # Spark jobs allowed in a warm checkpointed run. Measured at local[4] on
 # this corpus: 82 when every stage write re-scanned its output for the
 # manifest and components ran star rounds on the driver-sized edge set,
-# 36 with footer-read manifests and one-pass driver-side labeling.
-MAX_CHECKPOINTED_RUN_JOBS = 40
+# 36 with footer-read manifests and one-pass driver-side labeling, 34
+# with one phase-1 attach of the pairs instead of two.
+MAX_CHECKPOINTED_RUN_JOBS = 38
 
 
 def test_checkpointed_run_job_budget(spark, corpus, tmp_path):
@@ -272,14 +286,17 @@ def test_deterministic_pass_null_fingerprints_partition(spark):
     from entity_resolution_spark.operators.scoring import deterministic_match_pass
 
     feats = spark.createDataFrame(
-        [(1, None), (2, None), (3, "aa"), (4, "bb")], "url_id long, fingerprint string"
+        [(1, None, [1, 2, 3, 4]), (2, None, [1, 2, 3, 4]), (3, "aa", [1, 2, 0, 0]),
+         (4, "bb", [9, 9, 9, 4])],
+        "url_id long, fingerprint string, minhash_sig array<long>",
     )
     pairs = spark.createDataFrame([(1, 2), (1, 3), (3, 4)], "id_1 long, id_2 long")
     det, rem = deterministic_match_pass(pairs, feats)
     det_s = {(r["src"], r["dst"]) for r in det.collect()}
-    rem_s = {(r["id_1"], r["id_2"]) for r in rem.collect()}
+    rem_s = {(r["id_1"], r["id_2"]): r["jaccard_est"] for r in rem.collect()}
     assert det_s == {(1, 2)}  # null-null = identical sentinel content
-    assert rem_s == {(1, 3), (3, 4)}  # null-vs-value stays scoreable
+    # null-vs-value stays scoreable, with its signature estimate
+    assert rem_s == {(1, 3): 0.5, (3, 4): 0.0}
 
 
 def test_hash_mode_invariant_entity_partition(spark, corpus):

@@ -15,6 +15,7 @@ from entity_resolution_spark.operators.scoring import (
     ScoringConfig,
     _plan_size_bytes,
     broadcastable,
+    deterministic_match_pass,
     score_pairs_two_phase,
 )
 from entity_resolution_spark.plans.pipeline import EntityResolutionPipeline
@@ -75,14 +76,23 @@ def test_auto_plan_is_smj_above_threshold_broadcast_below(spark, feats_and_pairs
     BroadcastHashJoin is planned. Either way the scores are equal."""
     feats, pairs = feats_and_pairs
     cols = ["id_1", "id_2", "score"]
+
+    def score():
+        det, remaining = deterministic_match_pass(pairs, feats)
+        return det, score_pairs_two_phase(remaining, feats, ScoringConfig())
+
     with _broadcast_threshold(spark, "1"):
-        over = score_pairs_two_phase(pairs, feats, ScoringConfig())
+        det_over, over = score()
         plan_over = over._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastHashJoin" not in plan_over, plan_over
         a = {tuple(r) for r in over.select(*cols).collect()}
+        a_det = {tuple(r) for r in det_over.collect()}
     with _broadcast_threshold(spark, str(1 << 40)):
-        under = score_pairs_two_phase(pairs, feats, ScoringConfig())
+        det_under, under = score()
         plan_under = under._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastHashJoin" in plan_under, plan_under
         b = {tuple(r) for r in under.select(*cols).collect()}
-    assert a == b  # strategy choice must not change results
+        b_det = {tuple(r) for r in det_under.collect()}
+    # strategy choice must not change results
+    assert a == b
+    assert a_det == b_det

@@ -3,7 +3,7 @@
 translation (copies never share shingles/blocks, work scales
 linearly) — recording end-to-end seconds, candidate-pairs/sec, the
 blocking key-stat distribution (kept / singleton / dropped_hot /
-salted), and per-stage shuffle volume from the Spark status REST API.
+salted), and per-stage shuffle volume from the run's local event log.
 
 This is the first direct evidence that the cap/salt/AQE story holds
 an order of magnitude beyond the 10k-page bench corpus. Results are
@@ -16,25 +16,43 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
 import time
-import urllib.request
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from perfbench.eventlog import find_log, read_events  # noqa: E402
+from sf1_trainops import _eventlog_conf  # noqa: E402
 
 
-def _shuffle_stats(ui_url: str) -> dict:
-    """Peak + total shuffle bytes across completed stages (REST API)."""
-    apps = json.load(urllib.request.urlopen(f"{ui_url}/api/v1/applications"))
-    app_id = apps[0]["id"]
-    stages = json.load(
-        urllib.request.urlopen(f"{ui_url}/api/v1/applications/{app_id}/stages?status=complete")
-    )
-    writes = [s.get("shuffleWriteBytes", 0) for s in stages]
-    reads = [s.get("shuffleReadBytes", 0) for s in stages]
+def _shuffle_stats(log_dir: str) -> dict:
+    """Peak + total shuffle bytes across completed stages, summed from
+    the task ends of the run's event log (read after the session
+    stops)."""
+    written: dict[int, int] = {}
+    read: dict[int, int] = {}
+    complete: set[int] = set()
+    for ev in read_events(find_log(log_dir)):
+        kind = ev.get("Event")
+        if kind == "SparkListenerTaskEnd" and ev.get("Task Metrics"):
+            tm, sid = ev["Task Metrics"], ev["Stage ID"]
+            sw = tm.get("Shuffle Write Metrics") or {}
+            sr = tm.get("Shuffle Read Metrics") or {}
+            written[sid] = written.get(sid, 0) + sw.get("Shuffle Bytes Written", 0)
+            read[sid] = (
+                read.get(sid, 0) + sr.get("Remote Bytes Read", 0) + sr.get("Local Bytes Read", 0)
+            )
+        elif kind == "SparkListenerStageCompleted":
+            info = ev["Stage Info"]
+            if "Failure Reason" not in info:
+                complete.add(info["Stage ID"])
+    writes = [written.get(sid, 0) for sid in complete]
+    reads = [read.get(sid, 0) for sid in complete]
     return {
-        "n_stages": len(stages),
+        "n_stages": len(complete),
         "peak_stage_shuffle_write_mb": round(max(writes, default=0) / 1e6, 1),
         "total_shuffle_write_mb": round(sum(writes) / 1e6, 1),
         "peak_stage_shuffle_read_mb": round(max(reads, default=0) / 1e6, 1),
@@ -46,42 +64,34 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from bench import _bench_pages, _warmup
-    from entity_resolution_spark.operators.pairs import candidate_pairs
-    from entity_resolution_spark.operators.scoring import deterministic_match_pass
     from entity_resolution_spark.plans.pipeline import EntityResolutionPipeline
     from entity_resolution_spark.session import get_spark
 
     mult = int(os.environ.get("SF1_MULT", "10"))
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    log_dir, log_conf = _eventlog_conf("sf1_evidence_eventlog_")
     spark = get_spark(
         app_name="sf1_evidence",
         master="local[32]",
         # width scales with the corpus so per-partition state stays
         # bounded (at mult=30 the 64-partition layout OOMed)
         shuffle_partitions=max(64, 8 * mult),
-        extra_conf={"spark.ui.enabled": "true"},
+        extra_conf=log_conf,
     )
     _warmup(spark, sf_dir)
 
+    # stage checkpoints, NOT localCheckpoint: the feature table carries
+    # multi-KB shingle arrays, and beyond ~100k pages heap-resident
+    # checkpoint blocks OOM a 24g driver; 03_features is the parquet
+    # spill. A stale directory carries the same config fingerprint, so
+    # its stages would be resumed instead of measured.
+    ckpt_dir = os.path.join(os.environ.get("SF1_TMP", "/tmp"), f"sf1_ckpt_mult{mult}")
+    shutil.rmtree(ckpt_dir, ignore_errors=True)
     t0 = time.time()
     pages = _bench_pages(spark, sf_dir, mult)
     pipe = EntityResolutionPipeline()
-    # parquet spill, NOT localCheckpoint: the feature table carries
-    # multi-KB shingle arrays, and beyond ~100k pages the heap-resident
-    # checkpoint blocks OOM a 24g driver — the disk roundtrip is the
-    # same pattern the pipeline's StageCheckpointer uses at scale
-    feats_dir = os.path.join(
-        os.environ.get("SF1_TMP", "/tmp"), f"sf1_feats_mult{mult}"
-    )
-    pipe.featurize(pages).write.mode("overwrite").parquet(feats_dir)
-    feats = spark.read.parquet(feats_dir)
-    blocks, stats = pipe.block(feats)
-    pairs = candidate_pairs(blocks)
-    # materialize=False: at 10^8+ pairs the attach is too large to pin
-    # (the operator's documented scale path) — the fingerprint attach
-    # is a broadcast map-side join, cheap to recompute per consumer
-    det, rem = deterministic_match_pass(pairs, feats, materialize=False)
-    scored = pipe.score(rem, feats)
+    feats, pairs = pipe.candidates(pages, checkpoint_dir=ckpt_dir)
+    det, scored = pipe.scored(feats, pairs, checkpoint_dir=ckpt_dir)
     agg = scored.agg(
         F.count("*").alias("n_pairs"),
         F.sum((F.col("score") >= pipe.config.scoring.threshold).cast("long")).alias("n_match"),
@@ -92,15 +102,18 @@ def main() -> None:
     n_pairs = int(agg["n_pairs"] or 0) + n_det
 
     key_rows = (
-        stats.groupBy("status")
+        pipe.metrics["key_stats"]
+        .groupBy("status")
         .agg(F.count("*").alias("keys"), F.sum("n_records").alias("rows"))
         .collect()
     )
     key_stats = {r["status"]: {"keys": int(r["keys"]), "rows": int(r["rows"])} for r in key_rows}
+    blocks = spark.read.parquet(os.path.join(ckpt_dir, "04_blocks"))
     n_salted_keys = blocks.filter(F.col("block_key").contains("#")).select(
         "block_key"
     ).distinct().count()
     max_key = blocks.groupBy("block_key").count().agg(F.max("count")).first()[0]
+    spark.stop()
 
     out = {
         "mult": mult,
@@ -113,7 +126,7 @@ def main() -> None:
         "key_stats": key_stats,
         "n_salted_subkeys": n_salted_keys,
         "max_block_key_size": int(max_key or 0),
-        **_shuffle_stats(spark.sparkContext.uiWebUrl),
+        **_shuffle_stats(log_dir),
     }
     # merge into SF1.json keyed by mult, so multiple scale points
     # (10x, 30x, ...) accumulate into one evidence artifact
@@ -132,9 +145,8 @@ def main() -> None:
     with open(sf1_path, "w") as f:
         json.dump(doc, f, indent=2)
     print(json.dumps(out))
-    import shutil
-
-    shutil.rmtree(feats_dir, ignore_errors=True)
+    shutil.rmtree(ckpt_dir, ignore_errors=True)
+    shutil.rmtree(log_dir, ignore_errors=True)
 
 
 if __name__ == "__main__":

@@ -3,7 +3,7 @@ item #4: minhash/simhash/cross/semantic were only timed at sf0.1 —
 10k docs / 2k vectors): MinHash-LSH dedup, SimHash dedup, and
 cross-corpus MinHash dedup at 150k docs, and SRP-bucketed semantic
 dedup at ~100k vectors, each with the same per-task skew audit the
-paragraph/span evidence uses (Spark status REST API, worst stage
+paragraph/span evidence uses (the run's local event log, worst stage
 max/median task time).
 
 Duplication is PLANTED deliberately at scale: the doc replicate's
@@ -32,7 +32,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from sf1_trainops import _job_group_skew  # noqa: E402  (same audit)
+from sf1_trainops import _add_task_skews, _eventlog_conf  # noqa: E402  (same audit)
 
 
 def main() -> None:
@@ -50,11 +50,12 @@ def main() -> None:
     mult = int(os.environ.get("SF1_MULT", "30"))
     emb_mult = int(os.environ.get("SF1_EMB_MULT", "50"))
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    log_dir, log_conf = _eventlog_conf("sf1_sketchops_eventlog_")
     spark = get_spark(
         app_name="sf1_sketchops",
         master="local[32]",
         shuffle_partitions=max(64, 8 * mult),
-        extra_conf={"spark.ui.enabled": "true"},
+        extra_conf=log_conf,
     )
     _warmup(spark, sf_dir)
     par = spark.sparkContext.defaultParallelism
@@ -70,6 +71,8 @@ def main() -> None:
     docs = spark.read.parquet(docs_dir)
     n_docs = docs.count()
 
+    skew_recs: dict[str, dict] = {}
+
     def timed(name: str, make_df, unit_n: int, unit: str, skew_group: str) -> dict:
         # make_df is a THUNK: several of these operators do eager work
         # at construction (two-phase scoring checkpoints, CC loop
@@ -82,9 +85,7 @@ def main() -> None:
         sec = time.time() - t0
         sc.setJobGroup("sf1_other", "")
         rec = {"sec": round(sec, 1), f"{unit}_per_sec": round(unit_n / sec, 1)}
-        skew = _job_group_skew(spark, skew_group)
-        if skew:
-            rec["worst_stage_task_skew"] = skew
+        skew_recs[skew_group] = rec
         return rec
 
     out: dict = {"mult": mult, "n_docs": n_docs}
@@ -153,6 +154,8 @@ def main() -> None:
         "vecs",
         "sd_skew",
     )
+
+    _add_task_skews(spark, log_dir, skew_recs)
 
     sf1_path = os.path.join(REPO, "SF1.json")
     try:

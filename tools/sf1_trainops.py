@@ -7,7 +7,7 @@ round-3 judge item — PER-TASK SKEW for the dedup operators: the
 planted footer paragraph occurs on EVERY page (a 100k+-occurrence hot
 key), so a hot-key single-task shape would show up as one straggler
 task dominating the stage. The min-struct aggregation rewrite should
-keep max/median task time flat; the REST status API records it.
+keep max/median task time flat; the run's local event log records it.
 
 Also runs the COMPOSED build_training_set plan (curate -> paragraph
 dedup -> span dedup -> decontaminate -> split -> pack -> shard write)
@@ -28,59 +28,62 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
+import statistics
 import sys
+import tempfile
 import time
-import urllib.request
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from perfbench.eventlog import GroupMetrics, find_log, group_metrics, read_events  # noqa: E402
 
-def _job_group_skew(spark, group: str) -> dict | None:
-    """Worst-stage task-time distribution for the jobs of a job group
-    (Spark status REST API, quantiles 0/0.5/1.0). The straggler
-    signature of a hot-key window is max_over_median >> 1 on the
-    stage holding the hot key; a partial-aggregated groupBy keeps it
-    near 1 even when one key covers the whole corpus."""
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-    stage_ids: set[int] = set()
-    for jid in tracker.getJobIdsForGroup(group):
-        info = tracker.getJobInfo(jid)
-        if info:
-            stage_ids.update(info.stageIds)
-    ui = sc.uiWebUrl
-    try:
-        apps = json.load(urllib.request.urlopen(f"{ui}/api/v1/applications"))
-        app_id = apps[0]["id"]
-    except Exception:  # noqa: BLE001 — UI off: no skew evidence
-        return None
+
+def _eventlog_conf(prefix: str) -> tuple[str, dict[str, str]]:
+    """A fresh event-log directory and the session settings that write
+    an uncompressed log there (this Python has no zstandard module for
+    Spark's default codec); no Spark UI or network reads it."""
+    log_dir = tempfile.mkdtemp(prefix=prefix, dir=os.environ.get("SF1_TMP", "/tmp"))
+    return log_dir, {
+        "spark.eventLog.enabled": "true",
+        "spark.eventLog.dir": "file://" + log_dir,
+        "spark.eventLog.compress": "false",
+    }
+
+
+def _worst_stage_skew(g: GroupMetrics) -> dict | None:
+    """Worst-stage task-time distribution of one job group: the stage
+    with the slowest task, its median and max executor run time. The
+    straggler signature of a hot-key window is max_over_median >> 1
+    on the stage holding the hot key; a partial-aggregated groupBy
+    keeps it near 1 even when one key covers the whole corpus."""
     worst = None
-    for sid in stage_ids:
-        try:
-            attempts = json.load(
-                urllib.request.urlopen(
-                    f"{ui}/api/v1/applications/{app_id}/stages/{sid}"
-                    "?withSummaries=true&quantiles=0.0,0.5,1.0"
-                )
-            )
-        except Exception:  # noqa: BLE001 — skipped/missing stage
-            continue
-        for at in attempts:
-            dist = at.get("taskMetricsDistributions") or {}
-            rt = dist.get("executorRunTime")
-            if not rt or len(rt) < 3:
-                continue
-            rec = {
-                "stage": sid,
-                "n_tasks": int(at.get("numCompleteTasks", 0)),
-                "median_task_ms": round(rt[1], 1),
-                "max_task_ms": round(rt[2], 1),
-                "max_over_median": round(rt[2] / max(rt[1], 1.0), 2),
-            }
-            if worst is None or rec["max_task_ms"] > worst["max_task_ms"]:
-                worst = rec
+    for sid, ms in g.stage_task_ms.items():
+        med = statistics.median(ms)
+        rec = {
+            "stage": sid,
+            "n_tasks": len(ms),
+            "median_task_ms": round(float(med), 1),
+            "max_task_ms": round(float(max(ms)), 1),
+            "max_over_median": round(max(ms) / max(med, 1.0), 2),
+        }
+        if worst is None or rec["max_task_ms"] > worst["max_task_ms"]:
+            worst = rec
     return worst
+
+
+def _add_task_skews(spark, log_dir: str, recs: dict[str, dict]) -> None:
+    """Stop the session (which flushes its event log), then set each
+    record's worst_stage_task_skew from the tasks of its job group and
+    delete the log."""
+    spark.stop()
+    groups = group_metrics(read_events(find_log(log_dir)))
+    shutil.rmtree(log_dir, ignore_errors=True)
+    for group, rec in recs.items():
+        skew = _worst_stage_skew(groups.get(group, GroupMetrics()))
+        if skew:
+            rec["worst_stage_task_skew"] = skew
 
 
 def main() -> None:
@@ -94,11 +97,12 @@ def main() -> None:
 
     mult = int(os.environ.get("SF1_MULT", "10"))
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    log_dir, log_conf = _eventlog_conf("sf1_trainops_eventlog_")
     spark = get_spark(
         app_name="sf1_trainops",
         master="local[32]",
         shuffle_partitions=max(64, 8 * mult),
-        extra_conf={"spark.ui.enabled": "true"},
+        extra_conf=log_conf,
     )
     _warmup(spark, sf_dir)
     par = spark.sparkContext.defaultParallelism
@@ -124,6 +128,8 @@ def main() -> None:
     docs = spark.read.parquet(docs_dir)
     n_docs = docs.count()
 
+    skew_recs: dict[str, dict] = {}
+
     def timed(name, df, skew_group: str | None = None):
         sc = spark.sparkContext
         if skew_group:
@@ -134,9 +140,7 @@ def main() -> None:
         rec = {"sec": round(sec, 1), "docs_per_sec": round(n_docs / sec, 1)}
         if skew_group:
             sc.setJobGroup("sf1_other", "")
-            skew = _job_group_skew(spark, skew_group)
-            if skew:
-                rec["worst_stage_task_skew"] = skew
+            skew_recs[skew_group] = rec
         return rec
 
     out = {
@@ -203,6 +207,8 @@ def main() -> None:
             "max_shard_rows": max_shard,
             "min_shard_rows": min_shard,
         }
+
+    _add_task_skews(spark, log_dir, skew_recs)
 
     sf1_path = os.path.join(REPO, "SF1.json")
     doc: dict = {"measured_by": "tools/sf1_evidence.py", "runs": {}}
