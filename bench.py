@@ -64,22 +64,20 @@ def _replicate_docs(docs, mult: int):
     return reduce(DataFrame.unionByName, copies)
 
 
-def _er_pairs(pipe, pages) -> tuple[int, int]:
+def _er_pairs(pipe, pages):
     """The scale-bearing ER core exactly as pipeline.run drives it —
     candidates() (featurize -> blocking -> pairs) then scored()
-    (deterministic pre-pass -> two-phase scoring) — forced with one
-    aggregate. Returns (n_pages, n_candidate_pairs)."""
+    (phase 1 -> the estimate gate and phase 2) — forced with one
+    aggregate over the scores. Returns (feats, pairs), for the caller
+    to count outside its timed window."""
     from pyspark.sql import functions as F
 
     feats, pairs = pipe.candidates(pages)
-    det, scored = pipe.scored(feats, pairs)
-    agg = scored.agg(
-        F.count("*").alias("n_pairs"),
-        F.sum((F.col("score") >= pipe.config.scoring.threshold).cast("long")).alias("n_match"),
+    _, scored = pipe.scored(feats, pairs)
+    scored.agg(
+        F.sum((F.col("score") >= pipe.config.scoring.threshold).cast("long"))
     ).first()
-    n_det = det.count()
-    n_pages = feats.count()  # checkpointed — free; pages.count() would re-run datagen
-    return n_pages, int(agg["n_pairs"] or 0) + n_det
+    return feats, pairs
 
 
 def _bench_pages(spark, sf_dir: str, mult: int = 1):
@@ -349,15 +347,16 @@ def _run_headline(
 
     from entity_resolution_spark.plans.pipeline import EntityResolutionPipeline
 
-    er_stats: dict[str, int] = {}
+    er_out: dict = {}
 
     def _er_once() -> None:
         pages = _bench_pages(spark, sf_dir)
-        er_stats["n_pages"], er_stats["n_pairs"] = _er_pairs(EntityResolutionPipeline(), pages)
+        er_out["feats"], er_out["pairs"] = _er_pairs(EntityResolutionPipeline(), pages)
 
     _timed("er_pipeline_core", _er_once)
     er_sec = times["er_pipeline_core"]
-    n_pages, n_pairs = er_stats["n_pages"], er_stats["n_pairs"]
+    # feats is checkpointed — free; pages.count() would re-run datagen
+    n_pages, n_pairs = er_out["feats"].count(), er_out["pairs"].count()
     extras["n_pages"] = n_pages
     extras["n_candidate_pairs"] = n_pairs
     extras["pairs_per_sec"] = round(n_pairs / er_sec, 1) if er_sec > 0 else 0.0
@@ -371,15 +370,15 @@ def _run_headline(
     _bench_pages(spark, sf_dir).write.mode("overwrite").parquet(pages_dir)
     pages = spark.read.parquet(pages_dir)
     pipe = EntityResolutionPipeline()
-    eng_stats: dict[str, int] = {}
+    eng_out: dict = {}
 
     def _engine_once() -> None:
-        _, eng_stats["n_pairs"] = _er_pairs(pipe, pages)
+        _, eng_out["pairs"] = _er_pairs(pipe, pages)
 
     _timed("er_pipeline_core_engine", _engine_once)
     er_e = times["er_pipeline_core_engine"]
     extras["engine_pairs_per_sec"] = (
-        round(eng_stats["n_pairs"] / er_e, 1) if er_e > 0 else 0.0
+        round(eng_out["pairs"].count() / er_e, 1) if er_e > 0 else 0.0
     )
     return times, extras, samples
 
@@ -418,19 +417,18 @@ def _score_once(n: int) -> None:
     pairs = spark.read.parquet(f"{SCALE_DIR}/05_pairs")
     pipe = EntityResolutionPipeline()
 
-    def run(p):
+    def run(p) -> int:
+        """Scores p; returns its match count."""
         from pyspark.sql import functions as F
 
         from entity_resolution_spark.operators.scoring import deterministic_match_pass
 
         det, rem = deterministic_match_pass(p, feats)
-        agg = pipe.score(rem, feats).agg(
-            F.count("*").alias("n"),
-            F.sum((F.col("score") >= pipe.config.scoring.threshold).cast("long")).alias("m"),
-        ).first()
-        # every deterministic edge is a scored candidate and a match
-        n_det = det.count()
-        return {"n": agg["n"] + n_det, "m": (agg["m"] or 0) + n_det}
+        m = pipe.score(rem, feats).agg(
+            F.sum((F.col("score") >= pipe.config.scoring.threshold).cast("long"))
+        ).first()[0]
+        # every deterministic edge is a match
+        return (m or 0) + det.count()
 
     # warm on a FILE SUBSET of the same parquet: identical plan shape
     # to the timed run (a .sample() would inject a Sample operator and
@@ -444,17 +442,17 @@ def _score_once(n: int) -> None:
     # minute-scale interference bursts that CPU-steal accounting does
     # not capture (memory-bandwidth/LLC neighbors)
     sec = float("inf")
-    agg = None
+    n_match = None
     for _ in range(2 if n >= 8 else 1):
         spark.catalog.clearCache()
         t0 = time.time()
-        a = run(pairs)
+        m = run(pairs)
         sec_i = time.time() - t0
         if sec_i < sec:
-            sec, agg = sec_i, a
-    n_pairs = int(agg["n"])
+            sec, n_match = sec_i, m
+    n_pairs = pairs.count()
     print(json.dumps({"sec": round(sec, 3), "n_pairs": n_pairs,
-                      "pairs_per_sec": round(n_pairs / sec, 1), "n_match": int(agg["m"])}))
+                      "pairs_per_sec": round(n_pairs / sec, 1), "n_match": n_match}))
 
 
 def _run_scaling(sf_dir: str) -> dict[str, float]:

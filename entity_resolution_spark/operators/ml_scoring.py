@@ -43,16 +43,9 @@ from pyspark.ml.functions import vector_to_array
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# the engine's pair-similarity columns (score_pairs_two_phase output;
-# exact_dup is False there, exact pairs leave as phase-1 edges)
-DEFAULT_FEATURE_COLS = ["jaccard_shingles", "jw_title", "lev_ratio_prefix", "exact_dup_i"]
+# the engine's pair-similarity columns (score_pairs_two_phase output)
+DEFAULT_FEATURE_COLS = ["jaccard_shingles", "jw_title", "lev_ratio_prefix"]
 DEFAULT_THRESHOLD = 0.75  # Orchestrate_Demo.py:378
-
-
-def _with_feature_ints(scored: DataFrame) -> DataFrame:
-    if "exact_dup" in scored.columns and "exact_dup_i" not in scored.columns:
-        scored = scored.withColumn("exact_dup_i", F.col("exact_dup").cast("double"))
-    return scored
 
 
 def xgboost_available() -> bool:
@@ -78,9 +71,7 @@ def train_pair_classifier(
     mlir.py:1752-1765 — import-gated; raises with guidance when the
     package is absent)."""
     feature_cols = feature_cols or DEFAULT_FEATURE_COLS
-    df = _with_feature_ints(labeled_scored_pairs).withColumn(
-        "_label", F.col(label_col).cast("double")
-    )
+    df = labeled_scored_pairs.withColumn("_label", F.col(label_col).cast("double"))
     if estimator == "xgboost":
         if not xgboost_available():
             raise RuntimeError(
@@ -114,7 +105,7 @@ def predict_pairs(
     """scored pairs -> + match_prob (P[match]) + prediction (0/1 at
     ``threshold``). Probability extraction is vector_to_array — a
     native column op, not the reference's per-row UDF (mlir.py:1801)."""
-    out = model.transform(_with_feature_ints(scored_pairs))
+    out = model.transform(scored_pairs)
     return (
         out.withColumn("match_prob", vector_to_array(F.col("probability")).getItem(1))
         .withColumn("prediction", (F.col("match_prob") >= threshold).cast("int"))

@@ -113,10 +113,14 @@ def score_pairs_two_phase(
     """remaining(id_1, id_2, jaccard_est) from deterministic_match_pass
     x features -> scored pairs: the estimate gate, then phase 2.
 
-    Pairs whose MinHash Jaccard estimate is under gate_est get score =
-    est * w_jaccard, below any usable threshold by construction.
+    Only pairs whose MinHash Jaccard estimate is at least gate_est are
+    scored and returned; the rest are non-matches. With gate_sigmas >=
+    0 (the pipeline checks it), gate_est <= min_matchable_jaccard, and
+    gate_est's docstring bounds how often a matching pair's estimate
+    falls under it.
+
     Phase 2 attaches the full payload (shingles, title, prefix) to the
-    survivors only and computes the exact score with the single-phase
+    survivors and computes the exact score with the single-phase
     formula, so the Arrow-batched UDFs never see a non-survivor (a
     `when()` guard does NOT stop Spark evaluating a Python UDF on
     every row — only a filter does). Scores equal the single-phase
@@ -124,52 +128,22 @@ def score_pairs_two_phase(
     survivor.
 
     `exact_dup` is False on every row: exact-fingerprint pairs left as
-    deterministic edges in phase 1. The column stays because the
-    06_scored stage schema and the pair classifier's exact_dup_i
-    feature read it.
+    deterministic edges in phase 1. The column stays in the 06_scored
+    stage schema, which perfbench's tracer reads.
     """
     from entity_resolution_spark.operators.pairs import attach_features
 
     par = pairs.sparkSession.sparkContext.defaultParallelism
-    needs_full = F.col("jaccard_est") >= cfg.gate_est
-    cheap = pairs.filter(~needs_full).select(
-        "id_1",
-        "id_2",
-        F.lit(False).alias("exact_dup"),
-        "jaccard_est",
-        F.col("jaccard_est").alias("jaccard_shingles"),
-        F.lit(0.0).alias("jw_title"),
-        F.lit(0.0).alias("lev_ratio_prefix"),
-        (F.col("jaccard_est") * cfg.w_jaccard).alias("score"),
+    # a user repartition is exempt from AQE coalescing (see
+    # deterministic_match_pass): the survivors' UDF work spans every core
+    surv = pairs.filter(F.col("jaccard_est") >= cfg.gate_est).repartition(
+        par, "id_1", "id_2"
     )
-
-    surv = pairs.filter(needs_full).select(
-        "id_1", "id_2", "jaccard_est"
-    ).repartition(par, "id_1", "id_2")
-    # Only survivors' features are needed in phase 2 — semi-join the
-    # feature table down first. At web scale the full feature table is
-    # never broadcastable; the survivor slice usually is. The size
-    # check is a conservative upper bound (full feature table, though
-    # only the survivor slice joins): it errs toward the shuffle join
-    # at scale, never toward an executor OOM.
-    bcast = broadcastable(features, ["shingles", "norm_title", "text_prefix"])
-    surv_ids = (
-        surv.select(F.col("id_1").alias("url_id"))
-        .unionByName(surv.select(F.col("id_2").alias("url_id")))
-        .dropDuplicates(["url_id"])
-    )
-    if bcast:
-        surv_ids = F.broadcast(surv_ids)
-    feats_sub = features.join(surv_ids, "url_id", "left_semi")
-    wide = attach_features(
-        surv,
-        feats_sub,
-        cols=["shingles", "norm_title", "text_prefix"],
-        broadcast=bcast,
-    )
+    cols = ["shingles", "norm_title", "text_prefix"]
+    wide = attach_features(surv, features, cols=cols, broadcast=broadcastable(features, cols))
     jac = token_jaccard(F.col("shingles_1"), F.col("shingles_2")).alias("jaccard_shingles")
     sim_cond = F.col("jaccard_shingles") >= cfg.cheap_gate
-    full = (
+    return (
         wide.select(
             "id_1",
             "id_2",
@@ -206,7 +180,6 @@ def score_pairs_two_phase(
             "jaccard_shingles", "jw_title", "lev_ratio_prefix", "score",
         )
     )
-    return cheap.unionByName(full)
 
 
 def deterministic_match_pass(
@@ -264,10 +237,9 @@ def deterministic_match_pass(
             "jaccard_est"
         ),
     )
-    # Both returned frames filter this attach, and scoring reads
-    # `remaining` in two union branches — materialize it ONCE: else the
-    # pair join's map work reruns per consumer, and AQE plans the
-    # survivor joins without size stats (observed 5x slowdown). Eager,
+    # Both returned frames filter this attach — materialize it ONCE:
+    # else the pair join's map work reruns per consumer, and AQE plans
+    # the survivor join without size stats (observed 5x slowdown). Eager,
     # because under AQE even a lazy localCheckpoint runs the exchanges
     # at RDD conversion; callers that won't consume the result must not
     # call this (pipeline.scored skips it on a full resume).

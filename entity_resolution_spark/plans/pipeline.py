@@ -73,6 +73,13 @@ class EntityResolutionPipeline:
                 f"({self.config.scoring.num_perm} != {self.config.features.num_perm}): "
                 "the estimate gate is calibrated to the signature length"
             )
+        if self.config.scoring.gate_sigmas < 0:
+            raise ValueError(
+                f"ScoringConfig.gate_sigmas must be >= 0 (got "
+                f"{self.config.scoring.gate_sigmas}): a negative margin puts the "
+                "estimate gate above min_matchable_jaccard, and scoring drops the "
+                "pairs under the gate, so pairs that could match would be lost"
+            )
         bands = self.config.blocking.bands
         rows = self.config.blocking.rows_per_band
         if bands * rows > self.config.features.num_perm:
@@ -114,7 +121,8 @@ class EntityResolutionPipeline:
         return capped, stats
 
     def score(self, pairs: DataFrame, feats: DataFrame) -> DataFrame:
-        """Remaining pairs of deterministic_match_pass -> scored pairs."""
+        """Remaining pairs of deterministic_match_pass -> the estimate-gate
+        survivors, scored."""
         return score_pairs_two_phase(pairs, feats, self.config.scoring)
 
     # -- stage groups (run() and bench.py share them) ----------------------
@@ -130,7 +138,7 @@ class EntityResolutionPipeline:
         feats = _staged(ckpt, "03_features", lambda: self.featurize(pages))
         if ckpt is None:
             # The feature table feeds ~6 subplans (block keys, both
-            # sides of each attach, the survivor semi-join, stamping).
+            # sides of each attach, stamping).
             # Since the MinHash signature is now pure map-side algebra
             # (no shuffle for Spark to auto-reuse as a ReusedExchange),
             # materialize it ONCE here — the un-checkpointed analog of

@@ -24,7 +24,8 @@ def _labeled_scored(spark, corpus):
     blocks, _ = pipe.block(feats)
     pairs = candidate_pairs(blocks)
     # exact-fingerprint pairs leave as deterministic edges; the
-    # classifier learns on the pairs scoring sees
+    # classifier learns on the pairs scoring returns, the estimate-gate
+    # survivors
     _, remaining = deterministic_match_pass(pairs, feats)
     scored = pipe.score(remaining, feats)
     ids = feats.select("url", "url_id")

@@ -145,10 +145,28 @@ def test_two_phase_equivalent_to_single_phase(spark, corpus):
     wide = attach_features(pairs, feats, cols=PAIR_FEATURE_COLS, broadcast=True)
     one = edges_from_scores(score_pairs(wide, cfg), cfg.threshold)
     det, remaining = deterministic_match_pass(pairs, feats)
-    two = edges_from_scores(score_pairs_two_phase(remaining, feats, cfg), cfg.threshold)
+    scored = score_pairs_two_phase(remaining, feats, cfg)
+    two = edges_from_scores(scored, cfg.threshold)
     e1 = {(r["src"], r["dst"]) for r in one.collect()}
     e2 = {(r["src"], r["dst"]) for r in two.unionByName(det).collect()}
     assert e1 == e2
+    # phase 2 scores exactly the estimate-gate survivors
+    survivors = remaining.filter(F.col("jaccard_est") >= cfg.gate_est).count()
+    assert scored.filter(F.col("jaccard_est") < cfg.gate_est).count() == 0
+    assert scored.count() == survivors
+
+
+def test_negative_gate_sigmas_rejected():
+    """gate_est <= min_matchable_jaccard only holds for a non-negative
+    margin; scoring drops every pair under the gate, so a negative one
+    would drop pairs that can match."""
+    from entity_resolution_spark.operators.scoring import ScoringConfig
+
+    cfg = PipelineConfig(scoring=ScoringConfig(gate_sigmas=-1.0))
+    assert cfg.scoring.gate_est > cfg.scoring.min_matchable_jaccard
+    with pytest.raises(ValueError, match="gate_sigmas"):
+        EntityResolutionPipeline(cfg)
+    EntityResolutionPipeline(PipelineConfig(scoring=ScoringConfig(gate_sigmas=0.0)))
 
 
 def test_oracle_hash_mode_meets_f1_gate(spark, corpus):
@@ -238,8 +256,9 @@ def test_repeat_run_reuses_generated_code(spark, corpus):
 # this corpus: 82 when every stage write re-scanned its output for the
 # manifest and components ran star rounds on the driver-sized edge set,
 # 36 with footer-read manifests and one-pass driver-side labeling, 34
-# with one phase-1 attach of the pairs instead of two.
-MAX_CHECKPOINTED_RUN_JOBS = 38
+# with one phase-1 attach of the pairs instead of two, 31 with phase 2
+# scoring only the estimate-gate survivors.
+MAX_CHECKPOINTED_RUN_JOBS = 35
 
 
 def test_checkpointed_run_job_budget(spark, corpus, tmp_path):

@@ -72,7 +72,6 @@ def main() -> None:
     log_dir, log_conf = _eventlog_conf("sf1_evidence_eventlog_")
     spark = get_spark(
         app_name="sf1_evidence",
-        master="local[32]",
         # width scales with the corpus so per-partition state stays
         # bounded (at mult=30 the 64-partition layout OOMed)
         shuffle_partitions=max(64, 8 * mult),
@@ -92,14 +91,13 @@ def main() -> None:
     pipe = EntityResolutionPipeline()
     feats, pairs = pipe.candidates(pages, checkpoint_dir=ckpt_dir)
     det, scored = pipe.scored(feats, pairs, checkpoint_dir=ckpt_dir)
-    agg = scored.agg(
-        F.count("*").alias("n_pairs"),
-        F.sum((F.col("score") >= pipe.config.scoring.threshold).cast("long")).alias("n_match"),
-    ).first()
+    n_match = scored.agg(
+        F.sum((F.col("score") >= pipe.config.scoring.threshold).cast("long"))
+    ).first()[0]
     n_det = det.count()
     n_pages = feats.count()
     sec = time.time() - t0
-    n_pairs = int(agg["n_pairs"] or 0) + n_det
+    n_pairs = pairs.count()  # the 05_pairs stage parquet
 
     key_rows = (
         pipe.metrics["key_stats"]
@@ -113,13 +111,15 @@ def main() -> None:
         "block_key"
     ).distinct().count()
     max_key = blocks.groupBy("block_key").count().agg(F.max("count")).first()[0]
+    master = spark.sparkContext.master
     spark.stop()
 
     out = {
         "mult": mult,
+        "master": master,
         "n_pages": n_pages,
         "n_candidate_pairs": n_pairs,
-        "n_matches": int(agg["n_match"] or 0) + n_det,
+        "n_matches": int(n_match or 0) + n_det,
         "sec": round(sec, 1),
         "pairs_per_sec": round(n_pairs / sec, 1),
         "pages_per_sec": round(n_pages / sec, 1),

@@ -23,8 +23,10 @@ Usage: PYTHONPATH=/root/repo python tools/sf1_sketchops.py
 
 from __future__ import annotations
 
+import atexit
 import json
 import os
+import shutil
 import sys
 import time
 
@@ -53,7 +55,6 @@ def main() -> None:
     log_dir, log_conf = _eventlog_conf("sf1_sketchops_eventlog_")
     spark = get_spark(
         app_name="sf1_sketchops",
-        master="local[32]",
         shuffle_partitions=max(64, 8 * mult),
         extra_conf=log_conf,
     )
@@ -67,6 +68,7 @@ def main() -> None:
         mult,
     )
     docs_dir = os.path.join(os.environ.get("SF1_TMP", "/tmp"), f"sf1_sketch_docs_m{mult}")
+    atexit.register(shutil.rmtree, docs_dir, ignore_errors=True)
     docs.write.mode("overwrite").parquet(docs_dir)
     docs = spark.read.parquet(docs_dir)
     n_docs = docs.count()
@@ -88,7 +90,7 @@ def main() -> None:
         skew_recs[skew_group] = rec
         return rec
 
-    out: dict = {"mult": mult, "n_docs": n_docs}
+    out: dict = {"mult": mult, "master": spark.sparkContext.master, "n_docs": n_docs}
     out["minhash_lsh_dedup"] = timed(
         "minhash",
         lambda: minhash_lsh_dedup(docs, threshold=0.5),
@@ -143,6 +145,7 @@ def main() -> None:
 
     vecs = reduce(DataFrame.unionByName, copies).repartition(par * 2, "vec_id")
     vecs_dir = os.path.join(os.environ.get("SF1_TMP", "/tmp"), f"sf1_vecs_m{emb_mult}")
+    atexit.register(shutil.rmtree, vecs_dir, ignore_errors=True)
     vecs.write.mode("overwrite").parquet(vecs_dir)
     vecs = spark.read.parquet(vecs_dir)
     n_vecs = vecs.count()

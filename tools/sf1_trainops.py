@@ -26,6 +26,7 @@ Usage: PYTHONPATH=/root/repo python tools/sf1_trainops.py
 
 from __future__ import annotations
 
+import atexit
 import json
 import os
 import shutil
@@ -100,7 +101,6 @@ def main() -> None:
     log_dir, log_conf = _eventlog_conf("sf1_trainops_eventlog_")
     spark = get_spark(
         app_name="sf1_trainops",
-        master="local[32]",
         shuffle_partitions=max(64, 8 * mult),
         extra_conf=log_conf,
     )
@@ -124,6 +124,7 @@ def main() -> None:
     # one materialized input for all timed runs: operator time must
     # not include the datagen/replicate chain
     docs_dir = os.path.join(os.environ.get("SF1_TMP", "/tmp"), f"sf1_docs_mult{mult}")
+    atexit.register(shutil.rmtree, docs_dir, ignore_errors=True)
     docs.write.mode("overwrite").parquet(docs_dir)
     docs = spark.read.parquet(docs_dir)
     n_docs = docs.count()
@@ -145,6 +146,7 @@ def main() -> None:
 
     out = {
         "mult": mult,
+        "master": spark.sparkContext.master,
         "n_docs": n_docs,
         "hot_paragraph_occurrences": n_docs,  # the planted footer
         "paragraph_dedup": timed("paragraph_dedup", paragraph_dedup(docs), "para_skew"),
@@ -178,6 +180,7 @@ def main() -> None:
         ts_dir = os.path.join(
             os.environ.get("SF1_TMP", "/tmp"), f"sf1_training_set_mult{mult}"
         )
+        atexit.register(shutil.rmtree, ts_dir, ignore_errors=True)
         cfg = TrainingSetConfig(paragraph_dedup=True, span_dedup_k=8)
         t0 = time.time()
         metrics = build_training_set(docs, bench_docs, ts_dir, cfg)
