@@ -1260,8 +1260,9 @@ def er_pipeline_oracle(spark: SparkSession, sf_dir: str) -> DataFrame:
     single most important query has the weakest check' — no longer).
     Pages are built SQL-expressibly from documents (deterministic urls,
     timestamps, html wrappers); the UNMODIFIED EntityResolutionPipeline
-    runs in oracle hash mode (md5-derived url ids / shingles / MinHash /
-    band keys — identical plan shape to the xxhash64 production path,
+    runs in oracle hash mode (md5-derived url ids / shingles / MinHash;
+    64-bit block keys that the replay's string keys partition the same
+    way — identical plan shape to the xxhash64 production path,
     same extract, blocking, deterministic pre-pass, two-phase scoring
     with estimate gate, Jaro-Winkler (bit-identical to DuckDB's),
     large-star/small-star clustering, canonical stamping). The DuckDB
@@ -2088,14 +2089,13 @@ def _er_pipeline_oracle_sql() -> str:
                 HAVING count(*) > 1 AND count(*) <= {bcfg.key_cap}
             ),
             capped AS MATERIALIZED (
-                -- cap, then md5-derived salting of hot DOMAIN keys only
+                -- cap, then salting of hot DOMAIN keys only
                 -- (blocking.salt_hot_keys: band keys never salted;
-                -- salt = md5_long(url_id) % n_salts in md5 hash mode)
+                -- salt = pmod(url_id, n_salts), and md5-mode ids are
+                -- non-negative, so % is pmod here)
                 SELECT b.id,
                        CASE WHEN kk.n > {bcfg.salt_threshold} AND contains(b.key, 'domain:')
-                            THEN b.key || '#' ||
-                                 cast((('0x' || substr(md5(cast(b.id AS varchar)), 1, 15))::BIGINT)
-                                      % {bcfg.n_salts} AS varchar)
+                            THEN b.key || '#' || cast(b.id % {bcfg.n_salts} AS varchar)
                             ELSE b.key END AS key
                 FROM blocks b JOIN kk ON b.key = kk.key
             ),

@@ -102,22 +102,20 @@ def minhash_signature(
     return hashed.withColumn(out_col, sig).drop("_mh_hs")
 
 
-def lsh_band_keys(sig: Column, bands: int, rows: int, hash_mode: str = "xxhash64") -> Column:
-    """LSH band keys (array<string>) from a MinHash signature: one key
-    per band = 'b{i}:' + hash of that band's slice. Two sets share
-    a key iff a full band of MinHash components agrees —
-    P(candidate) = 1-(1-J^rows)^bands.
+def lsh_band_keys(sig: Column, bands: int, rows: int, scope: Column | None = None) -> Column:
+    """LSH band keys (array<bigint>) from a MinHash signature: one key
+    per band = xxhash64(scope, band index, that band's slice). Two sets
+    share a key iff they share the scope and a full band of MinHash
+    components agrees — P(candidate) = 1-(1-J^rows)^bands.
 
-    hash_mode='md5' uses the raw md5 hex of the joined slice as the
-    key (DuckDB-reproducible); default compresses via xxhash64."""
-    def band_key(i: int) -> Column:
-        joined = F.concat_ws(
-            ",", F.transform(F.slice(sig, i * rows + 1, rows), lambda x: x.cast("string"))
-        )
-        h = F.md5(joined) if hash_mode == "md5" else F.xxhash64(joined).cast("string")
-        return F.concat_ws(":", F.lit(f"b{i}"), h)
-
-    return F.array(*[band_key(i) for i in range(bands)])
+    A key only decides which rows are equal and is never an output
+    value, so one native hash serves every hash mode: an oracle replay
+    may key on any injective rendering of (scope, band, slice), such as
+    a string, and partitions rows into the same keys."""
+    prefix = [] if scope is None else [scope]
+    return F.array(
+        *[F.xxhash64(*prefix, F.lit(i), F.slice(sig, i * rows + 1, rows)) for i in range(bands)]
+    )
 
 
 def simhash_bits(hash_mode: str = "xxhash64") -> int:

@@ -51,6 +51,8 @@ _LOCAL_BYTES_PER_EDGE = 128
 _PAYLOAD_COPIES = 2
 # name of the edge-set size metrics observed on the distinct-edge checkpoint
 _SIZE_METRIC = "connected_components_edge_set"
+# name of the convergence checksum observed on each star round's checkpoint
+_ROUND_METRIC = "connected_components_round"
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -86,14 +88,11 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return nbrs.union(self_edges).filter(F.col("src") != F.col("dst")).distinct()
 
 
-def _edge_checksum(edges: DataFrame) -> tuple[int, int]:
-    # XOR-fold of row hashes: order-independent set checksum with no
-    # arithmetic overflow (ANSI-safe; edges are distinct by construction).
-    row = edges.select(
-        F.count("*").alias("n"),
-        F.coalesce(F.expr("bit_xor(xxhash64(src, dst))"), F.lit(0)).alias("chk"),
-    ).first()
-    return int(row["n"]), int(row["chk"])
+def _edge_checksum(observed: DataFrame) -> tuple[int, int]:
+    """(count, checksum) of a round's edge set, read from the metrics
+    its own localCheckpoint observed: no job of its own."""
+    row = observed._jdf.queryExecution().observedMetrics().get(_ROUND_METRIC).get()
+    return row.getLong(0), row.getLong(1)
 
 
 def _label_local(edges: DataFrame) -> DataFrame:
@@ -150,7 +149,8 @@ def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
     ``spark.sql.autoBroadcastJoinThreshold``, it is labeled in one pass
     on the driver (``_label_local``). Otherwise large-star/small-star
     rounds iterate to a fixed point (edge-set checksum stable),
-    localCheckpoint()ing each round to truncate lineage, and raise
+    localCheckpoint()ing each round to truncate lineage (the checksum
+    is observed on that same job), and raise
     RuntimeError if none is reached in ``max_iter`` rounds: the edge
     set is then not yet a star graph and reading components off it
     would split real components. ``max_iter`` bounds star rounds only.
@@ -183,8 +183,15 @@ def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
         return _label_local(cur)
     prev_sig: tuple[int, int] | None = None
     for _ in range(max_iter):
-        cur = _small_star(_large_star(cur)).localCheckpoint()
-        sig = _edge_checksum(cur)
+        # XOR-fold of row hashes: order-independent set checksum with no
+        # arithmetic overflow (ANSI-safe; edges are distinct by construction)
+        observed = _small_star(_large_star(cur)).observe(
+            _ROUND_METRIC,
+            F.count(F.lit(1)).alias("n"),
+            F.coalesce(F.expr("bit_xor(xxhash64(src, dst))"), F.lit(0)).alias("chk"),
+        )
+        cur = observed.localCheckpoint()
+        sig = _edge_checksum(observed)
         if sig == prev_sig:
             break
         prev_sig = sig

@@ -99,6 +99,8 @@ def minhash_lsh_dedup(
     md5-derived MinHash (hashing.py:md5_long), identical plan shape,
     so the CORRECTNESS gate value-checks this exact operator against
     DuckDB (the xxhash64 default stays the production fast path).
+    Band keys are 64-bit in both modes: they only group rows, so the
+    replay's string keys give the same buckets.
 
     gate_sigmas: margin (in binomial sigmas) of the phase-1 estimate
     gate; None DISABLES the gate so every band candidate gets the
@@ -128,7 +130,7 @@ def minhash_lsh_dedup(
     blocks = sigs.select(
         F.col("_id").alias("url_id"),
         F.explode(
-            lsh_band_keys(F.col("minhash_sig"), bands, rows_per_band, hash_mode=hash_mode)
+            lsh_band_keys(F.col("minhash_sig"), bands, rows_per_band)
         ).alias("block_key"),
     )
     capped, _stats = cap_key_frequency(blocks, cap=key_cap)
@@ -444,7 +446,7 @@ def minhash_lsh_dedup_against(
         keys = sigs.select(
             F.col("_id"),
             F.explode(
-                lsh_band_keys(F.col("minhash_sig"), bands, rows_per_band, hash_mode=hash_mode)
+                lsh_band_keys(F.col("minhash_sig"), bands, rows_per_band)
             ).alias("block_key"),
         )
         return sigs, keys
@@ -706,7 +708,11 @@ def embedding_near_dup(
     bucketed = srp_bucket(embeddings, id_col, vec_col, n_planes=n_planes, seed=seed, dim=dim)
     blocks = bucketed.select(F.col(id_col).alias("url_id"), F.col("srp_bucket").alias("block_key"))
     capped, _ = cap_key_frequency(blocks, cap=key_cap)
-    pairs = candidate_pairs(capped)
+    # AQE coalesces the small pair-dedup shuffle, so the cosine stage
+    # ran as one task; a user repartition is exempt from coalescing
+    # (as in scoring.deterministic_match_pass)
+    par = embeddings.sparkSession.sparkContext.defaultParallelism
+    pairs = candidate_pairs(capped).repartition(par, "id_1", "id_2")
     from entity_resolution_spark.functions.similarity import cosine_similarity
 
     v1 = embeddings.select(F.col(id_col).alias("id_1"), F.col(vec_col).alias("v_1"))

@@ -26,7 +26,7 @@ from entity_resolution_spark.normalize import normalize
 from entity_resolution_spark.operators.blocking import (
     BlockingConfig,
     block_keys,
-    cap_key_frequency,
+    key_stats,
     salt_hot_keys,
 )
 from entity_resolution_spark.operators.connected_components import connected_components
@@ -52,16 +52,15 @@ class PipelineConfig:
 
 
 def oracle_mode_config() -> PipelineConfig:
-    """Pipeline config with every hash in the ANSI-SQL-reproducible md5
-    mode (url ids, shingles, MinHash, band keys) — identical plan
-    shape to the default, so the WHOLE flagship pipeline can be
-    value-checked against a DuckDB replay (see __spark_entry__
-    er_pipeline_oracle). Slower per row (md5 + base conversion vs
+    """Pipeline config with every output-bearing hash in the
+    ANSI-SQL-reproducible md5 mode (url ids, shingles, MinHash) —
+    identical plan shape to the default, so the WHOLE flagship pipeline
+    can be value-checked against a DuckDB replay (see __spark_entry__
+    er_pipeline_oracle). Block keys stay 64-bit xxhash64: they only
+    decide which rows share a key, and the replay's string keys give
+    the same partition. Slower per row (md5 + base conversion vs
     xxhash64); production runs keep the default."""
-    return PipelineConfig(
-        features=FeatureConfig(hash_mode="md5"),
-        blocking=BlockingConfig(hash_mode="md5"),
-    )
+    return PipelineConfig(features=FeatureConfig(hash_mode="md5"))
 
 
 class EntityResolutionPipeline:
@@ -107,17 +106,14 @@ class EntityResolutionPipeline:
         )
 
     def block(self, feats: DataFrame) -> tuple[DataFrame, DataFrame]:
-        blocks = block_keys(feats, self.config.blocking)
-        capped, stats = cap_key_frequency(blocks, self.config.blocking.key_cap)
-        if self.config.blocking.salt_threshold > 0:
-            capped = salt_hot_keys(
-                capped,
-                stats,
-                salt_threshold=self.config.blocking.salt_threshold,
-                n_salts=self.config.blocking.n_salts,
-                hash_mode=self.config.blocking.hash_mode,
-                only_containing="domain:",
-            )
+        """feats -> (blocks(url_id, block_key, band, salt), key_stats).
+        The keys are counted once, eagerly: the cap, the salt and the
+        04_key_stats write all read that one count."""
+        cfg = self.config.blocking
+        blocks = block_keys(feats, cfg)
+        stats = key_stats(blocks, cfg.key_cap).localCheckpoint(eager=True)
+        kept = stats.filter(F.col("status") == "kept").select("block_key", "n_records")
+        capped = salt_hot_keys(blocks.join(kept, "block_key"), cfg.salt_threshold, cfg.n_salts)
         return capped, stats
 
     def score(self, pairs: DataFrame, feats: DataFrame) -> DataFrame:

@@ -170,6 +170,34 @@ def test_local_and_star_paths_agree(spark):
         assert local.schema == star.schema
 
 
+# Spark jobs a star-path labeling of the 201-node path submitted while
+# each round's checksum ran a job of its own (18 rounds); 73 with the
+# checksum observed on the round's checkpoint.
+STAR_PATH_JOBS_WITH_CHECKSUM_JOB = 91
+
+
+def test_star_round_checksum_costs_no_job(spark, monkeypatch):
+    """Each star round's convergence checksum is observed on that
+    round's own localCheckpoint: one checksum per round, and the call
+    submits fewer jobs than with a checksum job per round."""
+    rounds = []
+    orig = cc._edge_checksum
+    monkeypatch.setattr(cc, "_edge_checksum", lambda frame: rounds.append(1) or orig(frame))
+    sc = spark.sparkContext
+    group = "cc-star-round-jobs"
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    with _star_rounds(spark):
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        try:
+            rows = connected_components(_path(spark)).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", prev)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert {r["component"] for r in rows} == {0} and len(rows) == 201
+    assert len(rounds) > 1
+    assert jobs < STAR_PATH_JOBS_WITH_CHECKSUM_JOB, jobs
+
+
 def test_session_stays_serializable(spark):
     """Sizing the edge set must leave nothing on the session that Spark
     cannot serialize: a registered pyspark Observation does, and every

@@ -42,8 +42,9 @@ def test_minhash_estimates_jaccard(spark):
 def test_lsh_band_keys_shape(spark):
     df = _toy(spark).withColumn("sh", shingles(F.col("toks"), 3))
     sig = minhash_signature(df, "id", "sh", num_perm=64)
-    keys = sig.select(F.size(lsh_band_keys(F.col("minhash_sig"), 32, 2)).alias("n")).collect()
-    assert all(r["n"] == 32 for r in keys)
+    keys = sig.select(lsh_band_keys(F.col("minhash_sig"), 32, 2).alias("k"))
+    assert keys.dtypes == [("k", "array<bigint>")]
+    assert all(len(r["k"]) == 32 for r in keys.collect())
 
 
 def test_similar_docs_share_band_key(spark):

@@ -107,9 +107,7 @@ def main() -> None:
     )
     key_stats = {r["status"]: {"keys": int(r["keys"]), "rows": int(r["rows"])} for r in key_rows}
     blocks = spark.read.parquet(os.path.join(ckpt_dir, "04_blocks"))
-    n_salted_keys = blocks.filter(F.col("block_key").contains("#")).select(
-        "block_key"
-    ).distinct().count()
+    n_salted_keys = blocks.filter(F.col("salt").isNotNull()).select("block_key").distinct().count()
     max_key = blocks.groupBy("block_key").count().agg(F.max("count")).first()[0]
     master = spark.sparkContext.master
     spark.stop()
