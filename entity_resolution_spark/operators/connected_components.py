@@ -155,8 +155,8 @@ def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
     set is then not yet a star graph and reading components off it
     would split real components. ``max_iter`` bounds star rounds only.
     Vertices that only appear as sources/dsts of self-loops or not at
-    all are the caller's concern (singletons are stamped separately in
-    the pipeline).
+    all are the caller's concern (stamping treats a page in no
+    component as a one-page component).
 
     Ids may be ANY totally ordered type — the pipeline uses xxhash64
     longs, but string ids (raw urls) work unchanged: the algorithm

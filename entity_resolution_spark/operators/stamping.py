@@ -15,8 +15,11 @@ map-side and the attach join is AQE-skew-splittable.)
 Entity-ID properties (reference README.md:46-49): unique per entity;
 time invariant; invariant to adding new duplicate pages / re-crawls
 (as long as the earliest page of the component is unchanged).
-Singleton pages (in no component) are stamped from their own url via
-the same hash — an anti-join, reference J7 pattern (mlir.py:2044-2049).
+A page in no component is a one-page component keyed by its own
+url_id, so it goes through the same aggregate and its id is the hash
+of its own url. The reference stamps such records with a separate
+anti-join (mlir.py:2044-2049); here one left join and one groupBy
+cover both.
 """
 
 from __future__ import annotations
@@ -31,40 +34,29 @@ def stamp_entities(pages: DataFrame, components: DataFrame) -> DataFrame:
     """pages(url, url_id, warc_ts, ...) x components(id, component) ->
     entities(url, url_id, entity_id, canonical_url, component_size,
     first_seen).
+
+    The group key is coalesce(component, url_id): a component label is
+    the id of one of its members, and a page in no component is no
+    member, so its url_id never names another component. A url that
+    appears on several page rows is counted once per row, clustered or
+    not: a singleton url on two rows has component_size 2, and both
+    rows get the earlier warc_ts as first_seen.
     """
-    member = pages.join(components, pages["url_id"] == components["id"], "inner").drop("id")
+    keyed = pages.join(components, pages["url_id"] == components["id"], "left").select(
+        "url", "url_id", "warc_ts", F.coalesce("component", "url_id").alias("_key")
+    )
     # one agg computes the canonical winner AND the size: min(struct)
-    # orders by (warc_ts, url) lexicographically — exactly the old
-    # window's orderBy — and urls are unique, so the winner is total
-    canon = member.groupBy("component").agg(
+    # orders by (warc_ts, url) lexicographically, so the earliest page
+    # wins and a tie on warc_ts goes to the smaller url
+    canon = keyed.groupBy("_key").agg(
         F.min(F.struct(F.col("warc_ts"), F.col("url"))).alias("_w"),
         F.count("*").alias("component_size"),
-    ).select(
-        "component",
+    )
+    return keyed.join(canon, "_key").select(
+        "url",
+        "url_id",
+        entity_hash(F.col("_w.url")).alias("entity_id"),
         F.col("_w.url").alias("canonical_url"),
-        F.col("_w.warc_ts").alias("first_seen"),
         "component_size",
+        F.col("_w.warc_ts").alias("first_seen"),
     )
-    clustered = (
-        member.join(canon, "component")
-        .select(
-            "url",
-            "url_id",
-            entity_hash(F.col("canonical_url")).alias("entity_id"),
-            "canonical_url",
-            "component_size",
-            "first_seen",
-        )
-    )
-    singletons = (
-        pages.join(components, pages["url_id"] == components["id"], "left_anti")
-        .select(
-            "url",
-            "url_id",
-            entity_hash(F.col("url")).alias("entity_id"),
-            F.col("url").alias("canonical_url"),
-            F.lit(1).alias("component_size"),
-            F.col("warc_ts").alias("first_seen"),
-        )
-    )
-    return clustered.unionByName(singletons)

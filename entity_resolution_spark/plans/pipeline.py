@@ -3,7 +3,7 @@
 pages → extract → normalize → features → block → pairs → score →
 edges → cluster → stamp [→ incremental merge], with optional
 per-stage checkpointing (resume-from-failure) and a metrics side
-channel (blocking-key stats, stage row counts).
+channel that holds the blocking-key stats.
 
 Each stage is a pure DataFrame→DataFrame function from the operator
 modules; this module only sequences them — there is no hidden state,

@@ -36,7 +36,7 @@ the first batch that touches it, then pruned normally.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from entity_resolution_spark.datagen import PAGES_SCHEMA
@@ -44,6 +44,11 @@ from entity_resolution_spark.operators.incremental import merge_entities
 from entity_resolution_spark.plans.pipeline import EntityResolutionPipeline
 
 BUCKET_COL = "bucket"
+
+
+def _bucket(col: str, n_buckets: int) -> Column:
+    """The table's partition of a url: pmod(xxhash64(url), n_buckets)."""
+    return F.pmod(F.xxhash64(col), F.lit(n_buckets)).cast("int")
 
 
 def _touched_buckets(stamped: DataFrame, n_buckets: int) -> list[int]:
@@ -58,14 +63,8 @@ def _touched_buckets(stamped: DataFrame, n_buckets: int) -> list[int]:
     the entity rows adoption must find (the rep row url==canonical
     lives in hash(canonical)'s bucket) stay visible. Bounded driver
     action: <= 2*n_buckets distinct values."""
-    b_url = F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int")
-    b_can = F.pmod(F.xxhash64("canonical_url"), F.lit(n_buckets)).cast("int")
-    return [
-        r["_b"]
-        for r in stamped.select(F.explode(F.array(b_url, b_can)).alias("_b"))
-        .distinct()
-        .collect()
-    ]
+    both = F.array(_bucket("url", n_buckets), _bucket("canonical_url", n_buckets))
+    return [r["_b"] for r in stamped.select(F.explode(both).alias("_b")).distinct().collect()]
 
 
 def _table_exists(spark: SparkSession, location: str) -> bool:
@@ -132,24 +131,28 @@ def start_incremental_er(
     pipe = pipeline or EntityResolutionPipeline()
     stream = spark.readStream.schema(PAGES_SCHEMA).parquet(pages_dir)
 
+    def stamp(batch_df: DataFrame) -> DataFrame:
+        """The batch's entity rows with their bucket. Materialized ONCE:
+        the touched-buckets collect and the merge/write both read it,
+        and without the checkpoint the whole stamping tail (features x
+        components join, canonical aggregate, bucket projection) would
+        run twice per micro-batch. An empty batch stamps no rows, so
+        its merge and write change no table."""
+        pages = pages_lookup(batch_df) if pages_lookup is not None else batch_df
+        return (
+            pipe.run(pages)
+            .withColumn(BUCKET_COL, _bucket("url", n_buckets))
+            .localCheckpoint(eager=True)
+        )
+
     def process_iceberg_batch(batch_df: DataFrame, batch_id: int) -> None:
         from entity_resolution_spark.sources.io import merge_upsert
 
-        if batch_df.isEmpty():
-            return
-        pages = pages_lookup(batch_df) if pages_lookup is not None else batch_df
-        stamped = (
-            pipe.run(pages)
-            .withColumn(
-                BUCKET_COL, F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int")
-            )
-            .localCheckpoint(eager=True)
-        )
-        touched = _touched_buckets(stamped, n_buckets)
+        stamped = stamp(batch_df)
         # partition/file pruning via the bucket predicate — Iceberg
         # pushes it to the scan when the table is bucket-partitioned
         existing = spark.read.table(iceberg_table).filter(
-            F.col(BUCKET_COL).isin(touched)
+            F.col(BUCKET_COL).isin(_touched_buckets(stamped, n_buckets))
         )
         merged = merge_entities(existing, stamped).localCheckpoint(eager=True)
         # merge_upsert is insert-only (WHEN NOT MATCHED): existing urls
@@ -162,20 +165,7 @@ def start_incremental_er(
         merge_upsert(spark, iceberg_table, delta, key_cols=["url"])
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        pages = pages_lookup(batch_df) if pages_lookup is not None else batch_df
-        # materialized ONCE: both the touched-buckets collect and the
-        # merge/write below consume stamped — without the checkpoint
-        # the whole stamping tail (features x components join, window,
-        # bucket projection) would run twice per micro-batch
-        stamped = (
-            pipe.run(pages)
-            .withColumn(
-                BUCKET_COL, F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int")
-            )
-            .localCheckpoint(eager=True)
-        )
+        stamped = stamp(batch_df)
         migrating = False
         if _table_exists(spark, table_path):
             # Read errors PROPAGATE — an unreadable existing table
@@ -187,18 +177,16 @@ def start_incremental_er(
                 # a batch url (same url -> same hash) nor an adoption
                 # target (see _touched_buckets), so the merge only
                 # needs the touched slice
-                touched = _touched_buckets(stamped, n_buckets)
-                existing = existing.filter(F.col(BUCKET_COL).isin(touched))
+                existing = existing.filter(
+                    F.col(BUCKET_COL).isin(_touched_buckets(stamped, n_buckets))
+                )
             else:
                 # one-time migration from a pre-partitioned-layout
                 # table: derive buckets for every existing row and
                 # rewrite the whole table into the partitioned layout;
                 # subsequent batches prune again
                 migrating = True
-                existing = existing.withColumn(
-                    BUCKET_COL,
-                    F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int"),
-                )
+                existing = existing.withColumn(BUCKET_COL, _bucket("url", n_buckets))
             # localCheckpoint: the merged plan reads the files the
             # overwrite below replaces
             merged = merge_entities(existing, stamped).localCheckpoint(eager=True)

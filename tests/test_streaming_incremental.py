@@ -326,3 +326,63 @@ def test_incremental_er_adoption_survives_sparse_bucket_pruning(spark, corpus, t
 
     assert ids2[variant] == ids1[canon], "variant minted a fresh id"
     assert all(ids2[u] == ids1[u] for u in ids1), "existing ids drifted"
+
+
+def test_incremental_er_empty_batch_changes_no_table(spark, corpus, tmp_path):
+    """A zero-row micro-batch stamps no rows: folded into an existing
+    table it rewrites no bucket, and as a first batch it leaves no
+    table behind, so the next batch still seeds every url."""
+    from entity_resolution_spark.streaming.incremental_er import _table_exists
+
+    pages, _labels, _expected = corpus
+    pages = pages.select([f.name for f in PAGES_SCHEMA.fields])
+    empty = pages.limit(0)
+
+    # first batch empty: no table, then the next batch seeds it
+    feed = str(tmp_path / "feed")
+    table = str(tmp_path / "entities")
+    ckpt = str(tmp_path / "ckpt")
+    empty.coalesce(1).write.parquet(feed)
+    q = start_incremental_er(spark, feed, table, ckpt, n_buckets=16)
+    q.awaitTermination(300)
+    assert not _table_exists(spark, table)
+    b1 = pages.filter(F.pmod(F.xxhash64("url"), F.lit(5)) != 0)
+    b1.write.mode("append").parquet(feed)
+    q = start_incremental_er(spark, feed, table, ckpt, n_buckets=16)
+    q.awaitTermination(300)
+    urls = {r["url"] for r in spark.read.parquet(table).select("url").collect()}
+    assert urls == {r["url"] for r in b1.select("url").collect()}
+
+    # empty batch into the existing table: rows and files unchanged
+    before_rows = sorted(tuple(r) for r in spark.read.parquet(table).collect())
+    before_files = _bucket_files(table)
+    empty.coalesce(1).write.mode("append").parquet(feed)
+    q = start_incremental_er(spark, feed, table, ckpt, n_buckets=16)
+    q.awaitTermination(300)
+    assert _bucket_files(table) == before_files
+    assert sorted(tuple(r) for r in spark.read.parquet(table).collect()) == before_rows
+
+
+# Jobs one warm micro-batch (pipeline, table read, merge, bucket
+# overwrite) of a fifth of the shared corpus submits: measured 30, + 4.
+MAX_WARM_BATCH_JOBS = 34
+
+
+def test_incremental_er_warm_batch_job_budget(spark, corpus, tmp_path):
+    """A micro-batch folded into an existing table stays inside a
+    measured job count. Structured Streaming runs each query's jobs in
+    the job group named by its run id."""
+    pages, _labels, _expected = corpus
+    pages = pages.select([f.name for f in PAGES_SCHEMA.fields])
+    feed = str(tmp_path / "feed")
+    table = str(tmp_path / "entities")
+    ckpt = str(tmp_path / "ckpt")
+    part = F.pmod(F.xxhash64("url"), F.lit(5))
+    for k in (0, 1, 2):
+        # batch 0 seeds the table, batch 1 warms the merge path
+        pages.filter(part == k).write.mode("append").parquet(feed)
+        q = start_incremental_er(spark, feed, table, ckpt, n_buckets=16)
+        q.awaitTermination(300)
+        assert q.exception() is None
+    jobs = len(spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId)))
+    assert 0 < jobs <= MAX_WARM_BATCH_JOBS, jobs
