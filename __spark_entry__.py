@@ -556,9 +556,9 @@ def entity_stamp_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def incremental_merge_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental entity-table maintenance (J7): existing = stamped
-    docs with doc_id<250; batch = stamped full table; new urls are
-    appended, adopting the existing entity id when their canonical
-    already exists."""
+    docs with doc_id<250; batch = stamped full table; the NOT-EXISTS
+    insert appends the new urls. Ids are md5(canonical) on both sides,
+    so a new url whose canonical already exists carries that id."""
     from entity_resolution_spark.functions.text import fingerprint
     from entity_resolution_spark.operators.incremental import merge_entities
 
@@ -2137,24 +2137,16 @@ def _er_pipeline_oracle_sql() -> str:
                 SELECT reach.id, sym.t FROM reach JOIN sym ON reach.r = sym.s
             ),
             comp AS (SELECT id, min(r) AS c FROM reach GROUP BY id),
-            mem AS (
-                SELECT n.url, n.warc_ts, n.id, c.c
-                FROM norm n JOIN comp c ON n.id = c.id
-            ),
-            canon AS (
-                SELECT c, url AS canonical_url FROM (
-                    SELECT c, url, row_number() OVER (PARTITION BY c ORDER BY warc_ts, url) AS rn
-                    FROM mem
-                ) WHERE rn = 1
-            ),
-            sizes AS (SELECT c, count(*) AS n FROM mem GROUP BY c)
-            SELECT url, entity_id, canonical_url, component_size FROM (
-                SELECT m.url, sha256(cn.canonical_url) AS entity_id,
-                       cn.canonical_url, s.n AS component_size
-                FROM mem m JOIN canon cn ON m.c = cn.c JOIN sizes s ON m.c = s.c
-                UNION ALL
-                SELECT n.url, sha256(n.url), n.url, 1
-                FROM norm n WHERE n.id NOT IN (SELECT id FROM comp)
+            keyed AS (
+                SELECT n.url, n.warc_ts, coalesce(c.c, n.id) AS k
+                FROM norm n LEFT JOIN comp c ON n.id = c.id
+            )
+            SELECT url, sha256(canonical_url) AS entity_id, canonical_url,
+                   component_size FROM (
+                SELECT url,
+                       first_value(url) OVER (PARTITION BY k ORDER BY warc_ts, url) AS canonical_url,
+                       count(*) OVER (PARTITION BY k) AS component_size
+                FROM keyed
             ) ORDER BY url
         """
 
@@ -3404,17 +3396,10 @@ def oracle_sql() -> dict[str, str]:
             ),
             new_rows AS (
                 SELECT * FROM batch WHERE doc_id NOT IN (SELECT doc_id FROM existing)
-            ),
-            adopted AS (
-                SELECT n.doc_id, n.canon,
-                       coalesce(e.entity_id, n.entity_id) AS entity_id
-                FROM new_rows n
-                LEFT JOIN (SELECT DISTINCT canon, entity_id FROM existing) e
-                  ON n.canon = e.canon
             )
             SELECT doc_id, entity_id, canon AS canonical_id FROM existing
             UNION ALL
-            SELECT doc_id, entity_id, canon FROM adopted
+            SELECT doc_id, entity_id, canon FROM new_rows
             ORDER BY doc_id
         """,
         "events_asof_join": """

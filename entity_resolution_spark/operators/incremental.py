@@ -3,10 +3,10 @@
 Reference parity: the reference maintains full entity tables and folds
 in new batches with NOT-EXISTS inserts (mlir.py:2066-2095,
 2300-2306) — existing entities keep their ids; only unseen records are
-appended. Same contract here via left_anti + unionByName, plus a
-re-crawl rule: a url already present keeps its existing entity_id even
-if the new batch clustered it differently (id stability beats cluster
-drift; README.md:46-49 invariants).
+appended. Same contract here via left_anti + unionByName: a url already
+present keeps its existing row even if the new batch clustered it
+differently (id stability beats cluster drift; README.md:46-49
+invariants).
 """
 
 from __future__ import annotations
@@ -16,23 +16,15 @@ from pyspark.sql import functions as F
 
 
 def merge_entities(existing: DataFrame, batch: DataFrame) -> DataFrame:
-    """existing/batch: entities(url, url_id, entity_id, ...) ->
-    merged table. Urls already in `existing` are unchanged; new urls
-    adopt the entity_id of their cluster-mates when the cluster already
-    exists (via canonical_url), else keep their batch id."""
-    new_rows = batch.join(existing.select("url"), "url", "left_anti")
-    # If a new url's batch-cluster canonical matches an existing
-    # entity's canonical_url, adopt the existing id (stability).
-    existing_canon = existing.select(
-        F.col("canonical_url").alias("canonical_url"), F.col("entity_id").alias("_existing_id")
-    ).dropDuplicates(["canonical_url"])
-    adopted = (
-        new_rows.join(existing_canon, "canonical_url", "left")
-        .withColumn("entity_id", F.coalesce("_existing_id", "entity_id"))
-        .drop("_existing_id")
-        .select(*batch.columns)
-    )
-    return existing.unionByName(adopted)
+    """existing/batch: entities(url, url_id, entity_id, canonical_url,
+    ...) -> merged table: every existing row unchanged, plus the batch
+    rows whose url is not in `existing` (the NOT-EXISTS insert).
+
+    Precondition: entity_id = entity_hash(canonical_url) on both inputs
+    (stamp_entities sets it, this merge keeps it). So a new url whose
+    batch canonical is an existing entity's canonical already carries
+    that entity's id; no join on canonical_url is needed."""
+    return existing.unionByName(batch.join(existing.select("url"), "url", "left_anti"))
 
 
 def delta_candidate_pairs(

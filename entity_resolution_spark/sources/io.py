@@ -8,6 +8,7 @@ a capability probe (the test image ships no Iceberg runtime jar).
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -89,12 +90,17 @@ def merge_upsert(
 
 
 def table_exists(spark: SparkSession, location: str) -> bool:
-    """Reference S5 (mlir.py:128-141) — existence + non-emptiness."""
+    """Reference S5 (mlir.py:128-141) — existence + non-emptiness. Only
+    a missing path reads as absent: any other read error (a corrupt or
+    unreadable table) propagates rather than passing for 'no table'."""
     if "/" in location:
         try:
-            return len(spark.read.parquet(location).take(1)) > 0
-        except Exception:
-            return False
+            df = spark.read.parquet(location)
+        except AnalysisException as e:
+            if e.getCondition() == "PATH_NOT_FOUND":
+                return False
+            raise
+        return len(df.take(1)) > 0
     return spark.catalog.tableExists(location)
 
 

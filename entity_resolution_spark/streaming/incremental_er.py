@@ -5,11 +5,10 @@ mlir.py:2066-2095) expressed as a Structured Streaming job.
 Each micro-batch of newly crawled pages runs through the FULL
 blocking/scoring/clustering pipeline TOGETHER WITH the already-stamped
 entity table's pages, then `merge_entities` folds the result into the
-durable table: urls already present keep their entity_id (the
-README.md:46-49 stability invariants), genuinely new urls adopt the id
-of the cluster they join, novel clusters mint new ids. foreachBatch
-gives exactly-once table maintenance per micro-batch (the checkpoint
-tracks which input files are consumed).
+durable table: urls already present keep their row (the README.md:46-49
+stability invariants) and unseen urls are appended. foreachBatch gives
+exactly-once table maintenance per micro-batch (the checkpoint tracks
+which input files are consumed).
 
 Scale shape (round-2 judge finding fixed): the entity table is
 hash-PARTITIONED by bucket = pmod(xxhash64(url), n_buckets) and each
@@ -29,9 +28,8 @@ instead of being mistaken for 'first batch' and overwriting the
 durable table with batch-only results. 'Exists' means holds at least
 one data file: a dir left by a failed FIRST write (empty or
 `_temporary` litter only) retries as first batch instead of failing
-forever on schema inference. A table written by the pre-partitioned
-layout (no bucket column) is migrated in one static full rewrite on
-the first batch that touches it, then pruned normally.
+forever. A data file at the table root (a flat, unpartitioned table)
+raises: the table must be in the `bucket=N` layout.
 """
 
 from __future__ import annotations
@@ -53,18 +51,13 @@ def _bucket(col: str, n_buckets: int) -> Column:
 
 def _touched_buckets(stamped: DataFrame, n_buckets: int) -> list[int]:
     """Buckets the merge must see: every bucket a stamped row's url
-    hashes into, UNION every bucket a stamped row's canonical_url
-    hashes into. The url buckets alone are sufficient TODAY — a batch
-    cluster's canonical is the min member url, so hash(canonical) is
-    always among the url buckets — but merge_entities' id adoption
-    joins on canonical_url, and making the canonical buckets explicit
-    keeps the pruned read correct by LOCAL argument (round-4/5
-    advisory): if canonical semantics ever stop picking a member url,
-    the entity rows adoption must find (the rep row url==canonical
-    lives in hash(canonical)'s bucket) stay visible. Bounded driver
-    action: <= 2*n_buckets distinct values."""
-    both = F.array(_bucket("url", n_buckets), _bucket("canonical_url", n_buckets))
-    return [r["_b"] for r in stamped.select(F.explode(both).alias("_b")).distinct().collect()]
+    hashes into. A url already in the table lives in its own url's
+    bucket, so no other bucket can hold a row the merge compares
+    against. Bounded driver action: <= n_buckets distinct values."""
+    return [
+        r["_b"]
+        for r in stamped.select(_bucket("url", n_buckets).alias("_b")).distinct().collect()
+    ]
 
 
 def _table_exists(spark: SparkSession, location: str) -> bool:
@@ -73,29 +66,36 @@ def _table_exists(spark: SparkSession, location: str) -> bool:
     (unlike try/except around spark.read), and that treats a dir left
     behind by a FAILED first write (empty, or `_temporary` litter
     only) as absent so the retry takes the first-batch path instead of
-    failing forever on 'unable to infer schema'. Hidden entries
-    (`_temporary`, `_SUCCESS`, `.crc`) are not data; the recursive
-    listing stops at the first real file, so the probe is O(1) on a
-    populated table."""
+    failing forever. Hidden entries (`_temporary`, `_SUCCESS`, `.crc`)
+    are not data; the recursive listing stops at the first real file,
+    so the probe is O(1) on a populated table. Raises ValueError on a
+    data file at the root: a flat table is not in the `bucket=N`
+    layout, and reading it as one would miss its rows."""
     jvm = spark._jvm
     path = jvm.org.apache.hadoop.fs.Path(location)
     fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
     if not fs.exists(path):
         return False
 
-    def has_data(p) -> bool:
+    def listing(p) -> list:
         # manual walk, NOT fs.listFiles(recursive): that descends into
         # _temporary and would count task-attempt part files of the
         # failed write as data. Hidden subtrees are pruned whole.
-        for st in fs.listStatus(p):
-            name = st.getPath().getName()
-            if name.startswith("_") or name.startswith("."):
-                continue
-            if st.isFile() or has_data(st.getPath()):
-                return True
-        return False
+        return [
+            st for st in fs.listStatus(p) if not st.getPath().getName().startswith(("_", "."))
+        ]
 
-    return has_data(path)
+    def has_data(p) -> bool:
+        return any(st.isFile() or has_data(st.getPath()) for st in listing(p))
+
+    root = listing(path)
+    flat = sorted(st.getPath().getName() for st in root if st.isFile())
+    if flat:
+        raise ValueError(
+            f"entity table {location} holds data files at its root ({', '.join(flat[:3])}); "
+            f"expected the partitioned layout {location}/{BUCKET_COL}=N/"
+        )
+    return any(has_data(st.getPath()) for st in root)
 
 
 def start_incremental_er(
@@ -120,10 +120,11 @@ def start_incremental_er(
     ``iceberg_table`` — the DURABLE sink variant: a catalog table name
     (must already exist with the entity schema + bucket column; the
     runtime must ship Iceberg jars — sources.io.iceberg_available).
-    Per batch, the touched-bucket slice of the catalog table is read,
-    merged exactly as the parquet path, and written back via
-    sources.io.merge_upsert keyed on url — a snapshot-isolated MERGE
-    INTO, closing the parquet overwrite's known non-atomicity window.
+    Per batch, the stamped rows are written via sources.io.merge_upsert
+    keyed on url — a snapshot-isolated MERGE INTO whose WHEN NOT
+    MATCHED THEN INSERT is the same NOT-EXISTS insert as
+    merge_entities, closing the parquet overwrite's known
+    non-atomicity window.
     table_path is ignored in this mode. Exercised by the jar-gated
     pytest (tests/test_streaming_incremental.py) and documented in
     README; opt-in because the test image ships no Iceberg runtime.
@@ -133,11 +134,11 @@ def start_incremental_er(
 
     def stamp(batch_df: DataFrame) -> DataFrame:
         """The batch's entity rows with their bucket. Materialized ONCE:
-        the touched-buckets collect and the merge/write both read it,
-        and without the checkpoint the whole stamping tail (features x
-        components join, canonical aggregate, bucket projection) would
-        run twice per micro-batch. An empty batch stamps no rows, so
-        its merge and write change no table."""
+        the parquet sink's touched-buckets collect and its merge/write
+        both read it, and without the checkpoint the whole stamping
+        tail (features x components join, canonical aggregate, bucket
+        projection) would run twice per micro-batch. An empty batch
+        stamps no rows, so its merge and write change no table."""
         pages = pages_lookup(batch_df) if pages_lookup is not None else batch_df
         return (
             pipe.run(pages)
@@ -148,45 +149,22 @@ def start_incremental_er(
     def process_iceberg_batch(batch_df: DataFrame, batch_id: int) -> None:
         from entity_resolution_spark.sources.io import merge_upsert
 
-        stamped = stamp(batch_df)
-        # partition/file pruning via the bucket predicate — Iceberg
-        # pushes it to the scan when the table is bucket-partitioned
-        existing = spark.read.table(iceberg_table).filter(
-            F.col(BUCKET_COL).isin(_touched_buckets(stamped, n_buckets))
-        )
-        merged = merge_entities(existing, stamped).localCheckpoint(eager=True)
-        # merge_upsert is insert-only (WHEN NOT MATCHED): existing urls
-        # can never change, so only the NEW rows need to enter the
-        # MERGE probe — without the anti-join every existing row of a
-        # touched bucket would re-flow through the MERGE join just to
-        # no-op, making per-batch IO bucket-sized instead of
-        # batch-sized (review catch)
-        delta = merged.join(existing.select("url"), "url", "left_anti")
-        merge_upsert(spark, iceberg_table, delta, key_cols=["url"])
+        merge_upsert(spark, iceberg_table, stamp(batch_df), key_cols=["url"])
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         stamped = stamp(batch_df)
-        migrating = False
         if _table_exists(spark, table_path):
             # Read errors PROPAGATE — an unreadable existing table
             # must fail the batch, not be silently rebuilt from the
-            # batch alone.
-            existing = spark.read.parquet(table_path)
-            if BUCKET_COL in existing.columns:
-                # partition-pruned read: untouched buckets never hold
-                # a batch url (same url -> same hash) nor an adoption
-                # target (see _touched_buckets), so the merge only
-                # needs the touched slice
-                existing = existing.filter(
-                    F.col(BUCKET_COL).isin(_touched_buckets(stamped, n_buckets))
-                )
-            else:
-                # one-time migration from a pre-partitioned-layout
-                # table: derive buckets for every existing row and
-                # rewrite the whole table into the partitioned layout;
-                # subsequent batches prune again
-                migrating = True
-                existing = existing.withColumn(BUCKET_COL, _bucket("url", n_buckets))
+            # batch alone. The stamped schema spares a schema-inference
+            # job; the partition-pruned read sees only the touched
+            # slice, since untouched buckets never hold a batch url
+            # (same url -> same hash).
+            existing = (
+                spark.read.schema(stamped.schema)
+                .parquet(table_path)
+                .filter(F.col(BUCKET_COL).isin(_touched_buckets(stamped, n_buckets)))
+            )
             # localCheckpoint: the merged plan reads the files the
             # overwrite below replaces
             merged = merge_entities(existing, stamped).localCheckpoint(eager=True)
@@ -194,19 +172,16 @@ def start_incremental_er(
             merged = stamped  # already materialized above
         # dynamic mode replaces only the partitions present in this
         # write, leaving untouched buckets' files untouched. The
-        # migration rewrite must be STATIC: dynamic mode would leave
-        # the legacy flat part-files at the table root next to the new
-        # bucket=N dirs — a mixed, unreadable layout. Static overwrite
-        # shares the parquet sink's known non-atomicity (module
-        # docstring: Iceberg merge_upsert is the durable variant).
-        # repartition by bucket first: partitionBy writes one file per
-        # (input partition x bucket), so a wide merged frame would
-        # rewrite each touched bucket as that many small files, and
-        # the next batch would read them all back.
+        # overwrite is not atomic (module docstring: Iceberg
+        # merge_upsert is the durable variant). Repartition by bucket
+        # first: partitionBy writes one file per (input partition x
+        # bucket), so a wide merged frame would rewrite each touched
+        # bucket as that many small files, and the next batch would
+        # read them all back.
         (
             merged.repartition(BUCKET_COL)
             .write.partitionBy(BUCKET_COL)
-            .option("partitionOverwriteMode", "static" if migrating else "dynamic")
+            .option("partitionOverwriteMode", "dynamic")
             .mode("overwrite")
             .parquet(table_path)
         )

@@ -28,6 +28,8 @@ def test_merge_keeps_existing_ids(spark, corpus):
 
 
 def test_merge_appends_only_new_urls(spark, corpus):
+    """One new url is appended; it shares its existing cluster's
+    canonical, so its entity_id equals that cluster's existing id."""
     pages, _, _ = corpus
     ents = EntityResolutionPipeline().run(pages).cache()
     half = pages.limit(pages.count() // 2)
@@ -41,11 +43,55 @@ def test_merge_appends_only_new_urls(spark, corpus):
     batch = EntityResolutionPipeline().run(pages.unionByName(new_page))
     merged = merge_entities(ents, batch)
     assert merged.count() == ents.count() + 1
-    # the new url adopted the id of its existing cluster (same canonical)
+    # same canonical as its existing cluster -> the same entity_id
     new_row = merged.filter(F.col("url").endswith("-v2")).first()
     old = {r["url"]: r["entity_id"] for r in ents.collect()}
     orig_url = new_row["url"][: -len("-v2")]
     assert new_row["entity_id"] == old[orig_url]
+
+
+def _adoption_merge(existing, batch):
+    """The former merge: a new url whose batch canonical is an existing
+    canonical takes that entity's id (canonical dedup + left join +
+    coalesce). The oracle for the NOT-EXISTS insert below."""
+    new_rows = batch.join(existing.select("url"), "url", "left_anti")
+    canon = existing.select(
+        "canonical_url", F.col("entity_id").alias("_existing_id")
+    ).dropDuplicates(["canonical_url"])
+    return existing.unionByName(
+        new_rows.join(canon, "canonical_url", "left")
+        .withColumn("entity_id", F.coalesce("_existing_id", "entity_id"))
+        .drop("_existing_id")
+        .select(*batch.columns)
+    )
+
+
+def test_merge_entities_is_not_exists_insert(spark):
+    """With entity_id = entity_hash(canonical_url) on both sides, the
+    NOT-EXISTS insert gives the adoption merge's rows, with no
+    aggregate in its plan."""
+    from entity_resolution_spark.functions.hashing import entity_hash
+
+    def table(rows):
+        return spark.createDataFrame(
+            rows, "url string, canonical_url string, component_size long"
+        ).withColumn("entity_id", entity_hash(F.col("canonical_url")))
+
+    existing = table([("a", "a", 2), ("b", "a", 2), ("c", "c", 2), ("d", "c", 2)])
+    batch = table(
+        [
+            ("e", "a", 2),  # new url, batch canonical is an existing canonical
+            ("c", "b", 3),  # re-crawl of an existing url in another batch cluster
+            ("b", "b", 3),
+            ("x", "x", 2),  # brand-new cluster
+            ("y", "x", 2),
+        ]
+    )
+    merged = merge_entities(existing, batch)
+    assert sorted(merged.collect()) == sorted(_adoption_merge(existing, batch).collect())
+    assert {r["url"] for r in merged.collect()} == set("abcdexy")
+    plan = merged._jdf.queryExecution().optimizedPlan().toString()
+    assert "Aggregate" not in plan, plan
 
 
 def test_resume_skips_completed_stages(spark, corpus, tmp_path):

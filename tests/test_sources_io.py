@@ -38,6 +38,18 @@ def test_table_exists(spark, tmp_path):
     assert not table_exists(spark, empty)  # exists but empty -> reference S5 semantics
 
 
+def test_table_exists_propagates_read_errors(spark, tmp_path):
+    """Only a missing path reads as absent: a table that exists but
+    cannot be read raises instead of passing for 'no table'."""
+    import pytest
+
+    loc = tmp_path / "t5"
+    loc.mkdir()
+    (loc / "part-00000.parquet").write_bytes(b"this is not a parquet file")
+    with pytest.raises(Exception):
+        table_exists(spark, str(loc))
+
+
 def test_freshness(spark):
     fresh = spark.sql("SELECT current_timestamp() AS warc_ts")
     stale = spark.sql("SELECT timestamp'2001-01-01 00:00:00' AS warc_ts")

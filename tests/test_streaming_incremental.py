@@ -1,8 +1,8 @@
 """Streaming incremental entity resolution: foreachBatch maintenance
 of the durable entity table (reference mlir.py:2066-2095 semantics as
 Structured Streaming). Checks exactly-once file consumption across
-restarts, id stability for existing urls, and id adoption for new
-pages joining existing clusters."""
+restarts, id stability for existing urls, and that new pages sharing
+an existing cluster's canonical get that cluster's id."""
 
 from __future__ import annotations
 
@@ -42,8 +42,8 @@ def test_incremental_er_stream(spark, corpus, tmp_path):
     assert set(ids2) == {r["url"] for r in pages.select("url").collect()}
     assert all(ids2[u] == ids1[u] for u in ids1)
 
-    # adoption: a new url whose cluster canonical lives in batch 1
-    # must adopt that cluster's existing entity id
+    # a new url whose cluster canonical lives in batch 1 carries that
+    # cluster's existing entity id (both are entity_hash(canonical))
     full = EntityResolutionPipeline().run(pages)
     rows = full.select("url", "canonical_url").collect()
     canon = {r["url"]: r["canonical_url"] for r in rows}
@@ -160,6 +160,33 @@ def test_incremental_er_unreadable_table_fails_loudly(spark, corpus, tmp_path):
     assert os.listdir(table) == ["part-00000-corrupt.parquet"]
 
 
+def test_incremental_er_unreadable_bucket_fails_loudly(spark, corpus, tmp_path):
+    """A corrupt data file inside a touched bucket=N partition fails the
+    batch: the schema-given read still reads the file, and the error
+    propagates instead of the table being rewritten."""
+    import os
+
+    import pytest
+
+    pages, _labels, _expected = corpus
+    pages = pages.select([f.name for f in PAGES_SCHEMA.fields]).limit(10)
+    feed = str(tmp_path / "feed")
+    table = str(tmp_path / "entities")
+    ckpt = str(tmp_path / "ckpt")
+    os.makedirs(os.path.join(table, "bucket=0"))
+    garbage = os.path.join(table, "bucket=0", "part-00000-corrupt.parquet")
+    with open(garbage, "wb") as fh:
+        fh.write(b"this is not a parquet file")
+
+    pages.write.mode("append").parquet(feed)
+    # one bucket: every batch url is in bucket 0, so the read touches it
+    q = start_incremental_er(spark, feed, table, ckpt, n_buckets=1)
+    with pytest.raises(Exception):
+        q.awaitTermination(300)
+    assert os.listdir(table) == ["bucket=0"]
+    assert os.listdir(os.path.join(table, "bucket=0")) == ["part-00000-corrupt.parquet"]
+
+
 def test_incremental_er_failed_first_write_retries_as_first_batch(
     spark, corpus, tmp_path
 ):
@@ -188,51 +215,45 @@ def test_incremental_er_failed_first_write_retries_as_first_batch(
     assert "bucket" in got.columns
 
 
-def test_incremental_er_migrates_legacy_unpartitioned_table(spark, corpus, tmp_path):
-    """An entity table written by the pre-partitioned layout (flat
-    part files, no bucket column) must be migrated — not crashed on —
-    by the first batch that touches it: one static rewrite into the
-    bucketed layout, legacy entity ids preserved."""
+def test_incremental_er_flat_table_raises(spark, corpus, tmp_path):
+    """An entity table with data files at its root (flat, no bucket=N
+    partitions) fails the batch with an error naming the expected
+    layout, and the table's files are left as they were."""
     import os
 
+    import pytest
+
     pages, _labels, _expected = corpus
-    pages = pages.select([f.name for f in PAGES_SCHEMA.fields])
+    pages = pages.select([f.name for f in PAGES_SCHEMA.fields]).limit(10)
     feed = str(tmp_path / "feed")
     table = str(tmp_path / "entities")
     ckpt = str(tmp_path / "ckpt")
+    EntityResolutionPipeline().run(pages).write.parquet(table)
 
-    b1 = pages.filter(F.pmod(F.xxhash64("url"), F.lit(5)) != 0)
-    b2 = pages.join(b1.select("url"), "url", "left_anti").select(
-        [f.name for f in PAGES_SCHEMA.fields]
-    )
-    # legacy layout: the pipeline output written flat
-    EntityResolutionPipeline().run(b1).write.parquet(table)
-    ids1 = {r["url"]: r["entity_id"] for r in spark.read.parquet(table).collect()}
+    def listing():
+        return sorted(
+            (os.path.relpath(os.path.join(d, f), table), os.path.getsize(os.path.join(d, f)))
+            for d, _dirs, files in os.walk(table)
+            for f in files
+        )
 
-    b2.write.mode("append").parquet(feed)
+    before = listing()
+    pages.write.mode("append").parquet(feed)
     q = start_incremental_er(spark, feed, table, ckpt, n_buckets=16)
-    q.awaitTermination(300)
-
-    # migrated: bucketed dirs, no flat legacy part files left at root
-    root_parts = [
-        f for f in os.listdir(table)
-        if f.startswith("part-") and not f.startswith(("_", "."))
-    ]
-    assert not root_parts, f"legacy flat files survived migration: {root_parts}"
-    assert any(d.startswith("bucket=") for d in os.listdir(table))
-    ids2 = {r["url"]: r["entity_id"] for r in spark.read.parquet(table).collect()}
-    assert set(ids2) == {r["url"] for r in pages.select("url").collect()}
-    # legacy ids stable through the migration
-    assert all(ids2[u] == ids1[u] for u in ids1)
+    with pytest.raises(Exception):
+        q.awaitTermination(300)
+    msg = str(q.exception())
+    assert "ValueError" in msg and table in msg and "bucket=N" in msg, msg
+    assert listing() == before
 
 
 def test_incremental_er_iceberg_merge_sink(spark, corpus, tmp_path):
     """The DURABLE sink variant (round-3 judge item 9): when Iceberg
-    jars are present, the streaming job reads the touched-bucket slice
-    of a catalog table, merges, and writes back via MERGE INTO
-    (merge_upsert) instead of the parquet dynamic overwrite. Skipped
-    (not silently passed) without the runtime — the test image ships
-    no Iceberg jars; README documents the opt-in."""
+    jars are present, the streaming job writes each stamped batch via
+    MERGE INTO (merge_upsert, insert-only on url) instead of the parquet
+    dynamic overwrite. Skipped (not silently passed) without the
+    runtime — the test image ships no Iceberg jars; README documents
+    the opt-in."""
     import pytest
 
     from entity_resolution_spark.sources.io import iceberg_available
@@ -282,13 +303,12 @@ def test_incremental_er_iceberg_merge_sink(spark, corpus, tmp_path):
 
 
 def test_incremental_er_adoption_survives_sparse_bucket_pruning(spark, corpus, tmp_path):
-    """Round-4 advisory: the touched-bucket read must keep id-adoption
-    targets visible. With a SPARSE bucket space (4096) and a lookup
-    that supplies only partial context (the new variant + the
-    cluster's canonical page, NOT the other members), the pruned merge
-    must still adopt the existing entity id — the canonical's rep row
-    lives in hash(canonical)'s bucket, which _touched_buckets always
-    includes — and member rows in untouched buckets stay intact."""
+    """A new variant gets the entity_id of the existing entity whose
+    canonical it shares, through a SPARSE bucket space (4096) and a
+    lookup that supplies only partial context (the new variant + the
+    cluster's canonical page, NOT the other members): both sides carry
+    entity_hash(canonical), so the ids are equal, and member rows in
+    untouched buckets stay intact."""
     pages, _labels, _expected = corpus
     pages = pages.select([f.name for f in PAGES_SCHEMA.fields])
     feed = str(tmp_path / "feed")
@@ -364,8 +384,8 @@ def test_incremental_er_empty_batch_changes_no_table(spark, corpus, tmp_path):
 
 
 # Jobs one warm micro-batch (pipeline, table read, merge, bucket
-# overwrite) of a fifth of the shared corpus submits: measured 30, + 4.
-MAX_WARM_BATCH_JOBS = 34
+# overwrite) of a fifth of the shared corpus submits: measured 27, + 4.
+MAX_WARM_BATCH_JOBS = 31
 
 
 def test_incremental_er_warm_batch_job_budget(spark, corpus, tmp_path):
